@@ -78,30 +78,3 @@ def cap_batch(
     sketch.write.mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
     return admitted
 
-
-def freq_capped_stream(
-    stream: DataFrame,
-    store_path: str,
-    out_path: str,
-    checkpoint: str,
-    key_col: str,
-    id_col: str,
-    cap: int,
-    **kw,
-):
-    """Wire :func:`cap_batch` as a foreachBatch sink: admitted rows land
-    in ``out_path/batch=<id>/`` (idempotent replay), the sketch store
-    grows by one d*w-bounded partition per batch."""
-
-    def _body(batch: DataFrame, batch_id: int) -> None:
-        admitted = cap_batch(
-            batch, batch_id, store_path, key_col, id_col, cap, **kw
-        )
-        admitted.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
-
-    return (
-        stream.writeStream.foreachBatch(_body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

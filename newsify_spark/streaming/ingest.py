@@ -100,6 +100,21 @@ def ingest_batch(
     """Process ONE micro-batch (the foreachBatch body, exposed for batch
     use and tests). Returns the surviving rows it appended.
 
+    The plain-parquet return value is a lazy VIEW of the partition it
+    wrote (``out_path/batch=<id>``), not a copy: consume it (count,
+    collect, write) before anything rewrites or deletes that partition —
+    a replay of the same batch id overwrites it, and
+    :func:`expire_store_batches` on ``out_path`` removes it.
+
+    Intermediates are local checkpoints (``localCheckpoint(eager=True)``):
+    each hand-off is materialized once into executor-local blocks that
+    never enter the CacheManager, and the ContextCleaner frees them once
+    unreachable, so nothing needs releasing on return or on error. The
+    trade is lineage: a lost executor block fails the batch instead of
+    recomputing it. The idempotent replay contract (module docstring)
+    covers that — foreachBatch re-runs the failed batch id, which
+    rewrites its own partitions.
+
     ``txn_bronze=True`` lands survivors on a copy-on-write transaction
     log at ``out_path`` via :func:`operators.txnlog.idempotent_append`
     (an ``_batch`` column records provenance) instead of the plain
@@ -157,12 +172,14 @@ def ingest_batch(
         # and is excluded from exclude_batch filters only when asked.
         words = bloom_build_words(pre_store.select("text_hash"), "text_hash", m_store)
         save_bloom_partition(words, bloom_store_path, MIGRATION_BATCH_ID)
-    hashed = None
     if words is not None:
-        # the batch source feeds the prefilter's definitely-new/maybe
-        # split AND the MinHash stages below — persist it once so the
-        # un-cached source isn't evaluated three times (ADVICE r5)
-        hashed = batch.withColumn("text_hash", F.md5(F.col(text_col))).persist()
+        # the batch source feeds both sides of the prefilter's
+        # definitely-new/maybe split AND the MinHash stages below —
+        # materialize it once so the source isn't evaluated per branch
+        # (ADVICE r5)
+        hashed = batch.withColumn("text_hash", F.md5(F.col(text_col))).localCheckpoint(
+            eager=True
+        )
         # small store: collect the m/64-bounded words into a plan-literal
         # bitmap (zero-shuffle codegen probe); big store: the words table
         # stays distributed and the relational probe joins it as data.
@@ -182,14 +199,14 @@ def ingest_batch(
                 m_bits=m_store,
             ).drop("text_hash")
         # the prefiltered batch feeds EVERY downstream MinHash branch
-        # (16 band scans x 2 join sides) — persist it so the probe's
+        # (16 band scans x 2 join sides) — materialize it so the probe's
         # join/groupBy chain runs once, not once per branch
-        batch = batch.persist()
-    # 1. within-batch near-dup (min-id survivor). Persisted: the store
-    #    check below re-reads it from FIVE branches (signature pass, two
+        batch = batch.localCheckpoint(eager=True)
+    # 1. within-batch near-dup (min-id survivor). Materialized: the store
+    #    check below reads it from FIVE branches (signature pass, two
     #    band-join sides via the bucket sizing, the estimate join, the
-    #    final anti join) — unpersisted, each branch re-ran the whole
-    #    shingle/LSH/Jaccard DAG (r13, guide §5; ~5x the per-batch jobs).
+    #    final anti join) — as a lazy plan, each branch re-ran the whole
+    #    shingle/LSH/Jaccard DAG (~5x the per-batch jobs).
     local = minhash_dedup(
         batch,
         id_col=id_col,
@@ -198,7 +215,7 @@ def ingest_batch(
         num_hashes=num_hashes,
         band_size=band_size,
         shingle_n=shingle_n,
-    ).persist()
+    ).localCheckpoint(eager=True)
     # 2. vs-store (signature-only estimate; excludes this batch's own
     #    partition so a replay is deterministic)
     store = pre_store.drop("text_hash") if "text_hash" in pre_store.columns else pre_store
@@ -212,68 +229,51 @@ def ingest_batch(
         band_size=band_size,
         est_threshold=est_threshold,
     )
-    # one pass feeds both writes
-    survivors = survivors.persist()
-    try:
-        if txn_bronze:
-            from newsify_spark.operators.txnlog import idempotent_append
+    # materialized once: it feeds the corpus write, the signature pass,
+    # the text-hash side and the bloom words
+    survivors = survivors.localCheckpoint(eager=True)
+    if txn_bronze:
+        from newsify_spark.operators.txnlog import idempotent_append
 
-            idempotent_append(
-                spark,
-                out_path,
-                survivors.withColumn("_batch", F.lit(int(batch_id))),
-                app_id="ingest_bronze",
-                batch_id=int(batch_id),
-            )
-        else:
-            survivors.write.mode("overwrite").parquet(
-                f"{out_path}/batch={batch_id}"
-            )
-        sigs = minhash_signatures(
-            survivors,
-            id_col=id_col,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            shingle_n=shingle_n,
+        idempotent_append(
+            spark,
+            out_path,
+            survivors.withColumn("_batch", F.lit(int(batch_id))),
+            app_id="ingest_bronze",
+            batch_id=int(batch_id),
         )
-        # text_hash rides along for the next batch's bloom fast path
-        # (broadcast-join back — sigs and the hash side are both
-        # batch-sized)
-        hashes = survivors.select(
-            F.col(id_col), F.md5(F.col(text_col)).alias("text_hash")
-        )
-        sigs.join(F.broadcast(hashes), id_col).write.mode("overwrite").parquet(
-            f"{store_path}/batch={batch_id}"
-        )
-        # the admitted hashes' bloom words join the persisted bitmap
-        # store (m/64-bounded rows; same idempotent batch partition)
-        save_bloom_partition(
-            bloom_build_words(hashes.select("text_hash"), "text_hash", m_store),
-            bloom_store_path,
-            batch_id,
-        )
-        if not txn_bronze:
-            # hand the caller the WRITTEN rows (identical by
-            # construction: the overwrite above is the only writer of
-            # this partition) — post-return actions cost a file scan
-            # instead of re-running the whole shingle/LSH DAG after the
-            # unpersists below (r13, guide §5). Explicit schema: an
-            # empty batch writes a _SUCCESS-only dir.
-            result = spark.read.schema(survivors.schema).parquet(
-                f"{out_path}/batch={batch_id}"
-            )
-        else:
-            # bronze path: callers re-reading the result after return
-            # re-run the (batch-sized) plan; the txnlog itself holds the
-            # written rows
-            result = survivors
-    finally:
-        local.unpersist()
-        survivors.unpersist()
-        if hashed is not None:
-            batch.unpersist()
-            hashed.unpersist()
-    return result
+    else:
+        survivors.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
+    sigs = minhash_signatures(
+        survivors,
+        id_col=id_col,
+        text_col=text_col,
+        num_hashes=num_hashes,
+        shingle_n=shingle_n,
+    )
+    # text_hash rides along for the next batch's bloom fast path
+    # (broadcast-join back — sigs and the hash side are both
+    # batch-sized)
+    hashes = survivors.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
+    sigs.join(F.broadcast(hashes), id_col).write.mode("overwrite").parquet(
+        f"{store_path}/batch={batch_id}"
+    )
+    # the admitted hashes' bloom words join the persisted bitmap
+    # store (m/64-bounded rows; same idempotent batch partition)
+    save_bloom_partition(
+        bloom_build_words(hashes.select("text_hash"), "text_hash", m_store),
+        bloom_store_path,
+        batch_id,
+    )
+    if txn_bronze:
+        # the txnlog itself holds the written rows; the checkpointed
+        # survivors are the same rows without a log read
+        return survivors
+    # hand the caller the WRITTEN rows (identical by construction: the
+    # overwrite above is the only writer of this partition) — a file
+    # scan that does not depend on executor-local checkpoint blocks.
+    # Explicit schema: an empty batch writes a _SUCCESS-only dir.
+    return spark.read.schema(survivors.schema).parquet(f"{out_path}/batch={batch_id}")
 
 
 def expire_store_batches(

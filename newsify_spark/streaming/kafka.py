@@ -1,11 +1,11 @@
-"""Kafka source/sink wiring for S4/S5 (VERDICT round-1 item #9).
+"""Kafka source wiring for S5 (VERDICT round-1 item #9).
 
 The reference produces keyed JSON article messages to Kafka
 (ingestion_service.py:86-94) and consumes them per service
 (duplication_service.py:120-128). This sandbox has no broker and no
 spark-sql-kafka package, so the modeled path (to_json/from_json over
 file streams, queries/extra.py rel_json_roundtrip) carries the
-correctness evidence — but the production wiring below is the real
+correctness evidence — but the consumer wiring below is the real
 ``format("kafka")`` plan, selectable via the ``newsify.stream.source``
 config: deployments flip one conf, no code change.
 
@@ -47,36 +47,6 @@ def kafka_json_source(
         F.from_json(F.col("value").cast("string"), schema).alias("v"),
         F.col("timestamp").alias("kafka_ts"),
     ).select("msg_key", "v.*", "kafka_ts")
-
-
-def kafka_json_sink(
-    df: DataFrame,
-    key_col: str,
-    bootstrap: str = "localhost:9092",
-    topic: str = "articles",
-    checkpoint: str | None = None,
-):
-    """S4: keyed-JSON Kafka producer — returns the configured
-    DataStreamWriter (caller .start()s it when a broker exists).
-
-    Checkpoint locations are strictly per-query in Structured Streaming:
-    two sinks sharing one directory corrupt each other's offset state.
-    The default is therefore per-topic; production deployments should
-    pass a durable (non-/tmp) location explicitly.
-    """
-    if checkpoint is None:
-        checkpoint = f"/tmp/newsify-kafka-ckpt-{topic}"
-    payload_cols = [c for c in df.columns if c != key_col]
-    out = df.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.to_json(F.struct(*payload_cols)).alias("value"),
-    )
-    return (
-        out.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-    )
 
 
 def article_stream(

@@ -101,37 +101,37 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
     reference recomputes story centroids as plain means in batch
     refinement (batch-cluster-service.py:128-130); we fold incrementally.
     All steps are joins/aggregations — nothing is collected to the driver.
+
+    Intermediates, the returned assignments and the new ``state.stories``
+    are local checkpoints (``localCheckpoint(eager=True)``): executor-local
+    blocks outside the CacheManager, freed by the ContextCleaner once
+    unreachable. The trade is lineage: a lost executor block fails the
+    batch instead of recomputing it. Under foreachBatch that is covered by
+    the same idempotent replay contract as ``streaming.ingest``: ``state``
+    changes only after every checkpoint of the batch succeeded, so a
+    batch that fails in here leaves ``state`` as it found it and the
+    replayed batch id runs against the same state.
     """
     pts = batch.select(F.col("article_id").alias("point_id"), F.col("embedding").alias("point_vec"))
 
-    # every cache taken this batch is unpersisted before returning (the
-    # per-batch output is eagerly checkpointed first, so nothing returned
-    # still depends on them) — a long-running stream would otherwise grow
-    # CacheManager state by four entries per micro-batch, forever
-    batch_caches: list[DataFrame] = []
-
-    def _cache(df: DataFrame) -> DataFrame:
-        df = df.cache()
-        batch_caches.append(df)
-        return df
-
-    def _finish(out: DataFrame) -> DataFrame:
-        out = out.localCheckpoint(eager=True)
-        for c in batch_caches:
-            c.unpersist()
-        return out
-
+    # matched, unmatched, fmatch and minted each feed several branches
+    # below, so each is materialized once as an eager local checkpoint:
+    # later plans scan flat blocks instead of re-planning the nested
+    # lineage at every reference, and nothing enters the CacheManager, so
+    # a long-running stream accumulates no cache entries
     have_state = state.stories is not None and not state.stories.isEmpty()
     if have_state:
         cents = state.stories.select(
             F.col("story_id").alias("centroid_id"), F.col("centroid").alias("centroid_vec")
         )
         assigned = nearest_centroid_assign(pts, cents, threshold=state.threshold)
-        matched = _cache(assigned.filter("matched"))
-        unmatched = _cache(pts.join(matched.select("point_id"), "point_id", "left_anti"))
+        matched = assigned.filter("matched").localCheckpoint(eager=True)
+        unmatched = pts.join(
+            matched.select("point_id"), "point_id", "left_anti"
+        ).localCheckpoint(eager=True)
     else:
         matched = None
-        unmatched = _cache(pts)
+        unmatched = pts.localCheckpoint(eager=True)
 
     # ---- pass 2: in-batch leader election + re-assignment ----------------
     # pairwise near-neighbors among unmatched via the size-routed near-dup
@@ -162,12 +162,12 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
     fmatch = top_k_per_group(
         lead_sims, ["lid"], [F.col("sim").desc(), F.col("eid").asc()], 1
     )
-    fmatch = _cache(fmatch)
+    fmatch = fmatch.localCheckpoint(eager=True)
     # minters = leaders + articles whose matches were all non-leaders
     minters = unmatched.join(
         fmatch.select(F.col("lid").alias("point_id")), "point_id", "left_anti"
     )
-    minted = _cache(_mint_stories(minters, state.next_id))
+    minted = _mint_stories(minters, state.next_id).localCheckpoint(eager=True)
     n_minted = minted.count()  # scalar agg, not a row collect
 
     out_new = minted.select(
@@ -221,9 +221,10 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
         # — without it the state plan nests one level per micro-batch and
         # the driver eventually OOMs just printing it. Production form:
         # write the stories state to a table per batch and re-read.
+        result = out.localCheckpoint(eager=True)
         state.stories = minted_final.localCheckpoint(eager=True)
         state.next_id += n_minted
-        return _finish(out)
+        return result
 
     out_matched = matched.select(
         F.col("point_id").alias("article_id"),
@@ -264,9 +265,10 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
         .select("story_id", "centroid", (F.col("n_members") + F.col("added")).alias("n_members"))
     )
     # see the cold-start branch: checkpoint truncates per-batch lineage
+    result = out_matched.unionByName(out).localCheckpoint(eager=True)
     state.stories = refreshed.unionByName(minted_final).localCheckpoint(eager=True)
     state.next_id += n_minted
-    return _finish(out_matched.unionByName(out))
+    return result
 
 
 def run_microbatched(batches: list[DataFrame], threshold: float = 0.8) -> tuple[DataFrame, StoryState]:

@@ -415,8 +415,9 @@ def test_foreachbatch_soak_bounded_memory(spark):
     # lineage truncation: the state plan is a flat ExistingRDD scan whose
     # printed size does not grow with batch count
     assert max(plan_sizes) <= 2 * min(plan_sizes) + 500, plan_sizes
-    # bounded storage: cached/checkpointed RDD count must not trend with
-    # batch count (each batch takes ~5 caches + 2 checkpoints transiently)
+    # bounded storage: checkpointed RDD count must not trend with batch
+    # count (each batch takes ~6 local checkpoints; the ContextCleaner
+    # frees them once unreachable)
     assert storage_counts[-1] <= storage_counts[0] + 10, storage_counts
     assert state.stories.count() > 0
 
@@ -742,6 +743,72 @@ def test_ingest_bloom_migration_persists_store(spark, tmp_path):
     # exact redelivery of a PRE-migration doc is still dropped
     s2 = ingest_batch(mk([(20, t1)]), 2, store, out)
     assert [r.doc_id for r in s2.collect()] == []
+
+
+def test_micro_batch_body_caches_nothing(spark, tmp_path, monkeypatch):
+    """The micro-batch body (ingest_batch + assign_batch_to_stories) hands
+    its intermediates off as eager local checkpoints: over a 3-batch
+    stream with an exact re-delivery and a near-duplicate it never calls
+    persist or cache, leaves the session CacheManager empty, and once the
+    batch frames are unreachable the ContextCleaner frees their blocks —
+    stored RDDs do not grow with the batch count."""
+    import gc
+    import time
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from newsify_spark.streaming.ingest import ingest_batch
+    from newsify_spark.streaming.pipeline import StoryState, assign_batch_to_stories
+
+    calls = []
+    for name in ("persist", "cache"):
+
+        def spy(self, *a, _name=name, _orig=getattr(DataFrame, name), **k):
+            calls.append(_name)
+            return _orig(self, *a, **k)
+
+        monkeypatch.setattr(DataFrame, name, spy)
+
+    sc = spark.sparkContext
+
+    def stored_rdds():
+        return len(sc._jsc.sc().getRDDStorageInfo())
+
+    spark.catalog.clearCache()
+    before = stored_rdds()
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    text = {i: " ".join(f"w{i}_{k}" for k in range(30)) for i in range(1, 5)}
+    near3 = text[3].rsplit(" ", 1)[0] + " edited"  # word-3-shingle Jaccard 27/29
+    batches = [
+        ([(1, text[1]), (2, text[2])], [1, 2]),
+        ([(10, text[1]), (3, text[3])], [3]),  # 10: exact re-delivery of 1
+        ([(20, near3), (4, text[4])], [4]),  # 20: near-duplicate of 3
+    ]
+    state = StoryState(threshold=0.95)
+    for batch_id, (rows, want) in enumerate(batches):
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        kept = ingest_batch(docs, batch_id, store, out)
+        arts = kept.select(
+            F.col("doc_id").cast("string").alias("article_id"),
+            F.transform(
+                F.sequence(F.lit(1), F.lit(8)),
+                lambda j: F.sin(j * F.col("doc_id") + 1.0),
+            ).alias("embedding"),
+        )
+        got = assign_batch_to_stories(arts, state).collect()
+        assert sorted(int(r.article_id) for r in got) == want
+        del docs, kept, arts, got
+
+    assert not calls, calls
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # only the carried state.stories checkpoint stays reachable
+    for _ in range(20):
+        gc.collect()
+        sc._jvm.System.gc()
+        if stored_rdds() <= before + 3:
+            break
+        time.sleep(0.5)
+    assert stored_rdds() <= before + 3, (before, stored_rdds())
 
 
 def test_expire_store_batches_redis_ttl_semantics(spark, tmp_path):
