@@ -42,19 +42,6 @@ def epoch_us(col: Column | str) -> Column:
     return F.unix_micros(c.cast("timestamp"))
 
 
-def hours_between(later: Column | str, earlier: Column | str) -> Column:
-    """Time delta in fractional hours (F7; reference
-    recommendation-trainer.py:79)."""
-    later = F.col(later) if isinstance(later, str) else later
-    earlier = F.col(earlier) if isinstance(earlier, str) else earlier
-    return (F.unix_timestamp(later) - F.unix_timestamp(earlier)) / 3600.0
-
-
-def freshness_decay(age_hours: Column, rate: float = 0.1) -> Column:
-    """exp(-rate * age_hours) (F8; reference recommendation-trainer.py:77-80)."""
-    return F.exp(-F.lit(rate) * age_hours)
-
-
 def safe_div(num: Column, denom: Column, default: float = 0.0) -> Column:
     """num/denom with explicit 0-denominator handling (F9; the reference's
     drift formula divides by a possibly-zero historical mean)."""

@@ -6,8 +6,12 @@ recommendation_retrainer_dag.py:26-52, kube_pipeline.py:5-13).
 Lakehouse layout (SURVEY §7.1): bronze (raw as ingested) → silver
 (deduped, enriched, clustered) → gold (stories, recommendations,
 user_embeddings-equivalent profiles, bias reports), all partitioned
-parquet. Each stage is a pure DataFrame function; this module only
-sequences and writes.
+parquet. Each stage is a DataFrame function; this module only sequences
+and writes. A hand-off that feeds more than one consumer (the silver
+articles, the cluster membership, the story rollup, the flagship's
+interaction table) is an eager local checkpoint: materialized once,
+never entered into the session CacheManager, and freed by the
+ContextCleaner once unreachable, so a run leaves no cached plan behind.
 
 At 100 TB: articles partition by ingest date, events by event date,
 gold tables by run date; every stage below already keys its shuffles so
@@ -56,7 +60,15 @@ def stage_ingest(spark: SparkSession, sf_dir: str, embed_dim: int = 64) -> DataF
 def stage_cluster(articles: DataFrame, emb_table: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Silver: assign articles to stories (J4 against current centroids —
     here seeded from the embeddings fixture labels), roll up story
-    centroid (A2) + entity union (A3) + membership arrays (E4)."""
+    centroid (A2) + entity union (A3) + membership arrays (E4).
+
+    The article → story membership is materialized eagerly here (a local
+    checkpoint), so the silver write and the story rollup share one
+    assignment instead of each re-running the centroid build and the
+    nearest-centroid join. The trade is lineage: a lost executor block
+    fails the run rather than recomputing, and a rerun is safe because
+    every pipeline write overwrites.
+    """
     from newsify_spark.operators.cluster import cluster_centroids
 
     seed_labels = emb_table.select(
@@ -81,7 +93,7 @@ def stage_cluster(articles: DataFrame, emb_table: DataFrame) -> tuple[DataFrame,
         F.col("point_id").alias("article_id"),
         F.when(F.col("matched"), F.col("centroid_id")).alias("story_id"),
         "similarity",
-    )
+    ).localCheckpoint(eager=True)
     enriched = articles.join(membership, "article_id")
     stories = (
         enriched.filter(F.col("story_id").isNotNull())
@@ -160,20 +172,17 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, fl
     """Run every stage, write gold tables, return per-stage seconds."""
     timings: dict[str, float] = {}
 
-    def clock(name: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
+    def clock(name: str, df: DataFrame) -> None:
         t0 = time.perf_counter()
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(os.path.join(out_dir, name))
+        df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
         timings[name] = round(time.perf_counter() - t0, 3)
 
-    articles = stage_ingest(spark, sf_dir).cache()
+    articles = stage_ingest(spark, sf_dir).localCheckpoint(eager=True)
     clock("silver_articles", articles)
     emb_table = load(spark, sf_dir, "embeddings")
     enriched, stories = stage_cluster(articles, emb_table)
     clock("silver_article_stories", enriched.drop("embedding", "entities"))
-    stories = stories.cache()
+    stories = stories.localCheckpoint(eager=True)
     clock("gold_stories", stage_summarize(stories, articles))
     clock("gold_recommendations", stage_recommend(spark, sf_dir))
     clock("gold_bias_reports", stage_bias(spark, sf_dir))

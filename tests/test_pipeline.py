@@ -94,3 +94,31 @@ def test_incremental_summarization(spark):
     stale = out[out.story_id.astype("int64") % 2 == 1]
     assert (fresh.summary == "SENTINEL").all()      # untouched
     assert (stale.summary != "SENTINEL").all()      # re-summarized
+
+
+def test_pipeline_caches_nothing(spark, tmp_path, monkeypatch):
+    """The batch pipeline hands its stages off as eager local checkpoints:
+    a full run_pipeline plus the flagship query never calls persist or
+    cache and leaves the session CacheManager empty."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from newsify_spark.pipeline import run_pipeline
+    from newsify_spark.queries import REGISTRY
+
+    spark.catalog.clearCache()
+    calls = []
+    for name in ("persist", "cache"):
+
+        def spy(self, *a, _name=name, _orig=getattr(DataFrame, name), **k):
+            calls.append(_name)
+            return _orig(self, *a, **k)
+
+        monkeypatch.setattr(DataFrame, name, spy)
+
+    run_pipeline(spark, SF_DIR, str(tmp_path / "gold"))
+    REGISTRY["rec_hybrid_topk"].fn(spark, SF_DIR).write.format("noop").mode(
+        "overwrite"
+    ).save()
+
+    assert not calls, calls
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -70,8 +70,8 @@ def test_interactions_spread_is_keyed(spark):
     from newsify_spark.queries.recommend import _interactions_with_ts
     from newsify_spark.tables import load
 
-    # this asserts the UNCACHED plan shape: when the full suite runs,
-    # an earlier test's inter_all.cache() makes this plan resolve to an
+    # this asserts the UNCACHED plan shape: if an earlier test left this
+    # rollup in the CacheManager, the plan would resolve to an
     # InMemoryRelation whose stored AQE plan prints its one exchange
     # twice (Initial + Final sections), breaking the string count
     spark.catalog.clearCache()
@@ -128,12 +128,17 @@ def test_partition_pruning_on_partitioned_write(spark, tmp_path):
 
 
 def test_exchange_reuse_in_flagship(spark):
-    """The cached interactions table must appear as InMemoryTableScan
-    (computed once for its three consumers)."""
+    """The interactions table is computed once for its consumers: the
+    flagship reads it as a checkpointed ExistingRDD, and its executed
+    plan scans no events parquet."""
     from newsify_spark.queries import REGISTRY
 
-    plan = _plan(REGISTRY["rec_hybrid_topk"].fn(spark, SF_DIR))
-    assert "InMemoryTableScan" in plan
+    df = REGISTRY["rec_hybrid_topk"].fn(spark, SF_DIR)
+    plan = _plan(df)
+    assert "Scan ExistingRDD" in plan, plan
+    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
+    assert scans and not any("props" in cols for cols in scans), scans
+    assert not any("events" in f for f in df.inputFiles()), df.inputFiles()
 
 
 def test_flagship_is_fully_jvm_side(spark):
