@@ -23,8 +23,14 @@ pipeline oracle-checkable.
 Scale notes: every step is shuffle-on-key (explode shingles -> groupBy
 doc; band join is an equi join). Hot buckets (boilerplate shingles) are
 the classic skew source: cap bucket size via a count filter before the
-self-join (``max_bucket`` arg) exactly like production MinHash pipelines
+join (``max_bucket`` arg) exactly like production MinHash pipelines
 drop stop-shingles.
+
+Every LSH path here gets its candidates from ONE core,
+``similarity._bucket_candidates``: the self-join shape for
+``lsh_candidate_pairs``, ``embedding_near_dup_lsh`` and the SemDeDup LSH
+prune, the cross-set shape (batch vs capped store) for
+``incremental_dedup``. The embedding paths verify with ``_unit_dot``.
 """
 
 from __future__ import annotations
@@ -33,7 +39,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from newsify_spark.functions.text import tokens, word_shingles
-from newsify_spark.functions.vectors import cosine
+from newsify_spark.operators.similarity import (
+    RHP_MAX_BUCKET,
+    _bucket_candidates,
+    _unit_dot,
+    rhp_signatures_pandas,
+)
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
@@ -86,17 +97,7 @@ def lsh_candidate_pairs(
     id_a < id_b. ``max_bucket`` drops degenerate mega-buckets (boilerplate)
     before the self-join — the skew guard that matters at 100 TB."""
     bands = _sig_bands(sigs, id_col, num_hashes, band_size)
-    sized = bands.groupBy("band", "bucket").agg(F.count("*").alias("n"))
-    ok = sized.filter(F.col("n").between(2, max_bucket)).select("band", "bucket")
-    bands = bands.join(ok, ["band", "bucket"], "left_semi")
-    a = bands.select("band", "bucket", F.col(id_col).alias("id_a"))
-    b = bands.select("band", "bucket", F.col(id_col).alias("id_b"))
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return _bucket_candidates(bands, id_col, ["band", "bucket"], max_bucket)
 
 
 def jaccard_pairs(
@@ -205,8 +206,8 @@ def embedding_near_dup(
 ) -> DataFrame:
     """Cosine near-duplicate pairs (id_a < id_b, sim >= threshold).
 
-    All-pairs form — correct and oracle-checkable; at scale swap the
-    crossJoin for knn_join_lsh candidates (same verify step)."""
+    All-pairs form — correct and oracle-checkable;
+    :func:`embedding_near_dup_lsh` is the bucketed scale form."""
     from newsify_spark.functions.vectors import cosine_with_norms, l2_norm
 
     # norms computed once per row per side, not per pair (r12, guide
@@ -245,7 +246,7 @@ def embedding_near_dup_lsh(
     n_bands: int = 16,
     bits_per_band: int | None = 8,
     seed: int = 42,
-    max_bucket: int = 10_000,
+    max_bucket: int = RHP_MAX_BUCKET,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Scale form of :func:`embedding_near_dup`: random-hyperplane LSH
@@ -267,14 +268,26 @@ def embedding_near_dup_lsh(
     size (``_auto_bits``: hold expected bucket size constant), using
     ``n_rows`` if the caller already counted.
     """
-    if bits_per_band is None:
-        bits_per_band = _auto_bits(n_rows if n_rows is not None else emb.count())
-    from newsify_spark.operators.similarity import rhp_signatures_pandas
+    return _rhp_near_dups(
+        emb, id_col, vec_col, threshold, dim, n_bands, bits_per_band, seed,
+        max_bucket, n_rows,
+    )
 
+
+def _rhp_near_dups(
+    emb: DataFrame, id_col: str, vec_col: str, threshold: float, dim: int | None,
+    n_bands: int, bits_per_band: int | None, seed: int, max_bucket: int,
+    n_rows: int | None = None, group_col: str | None = None,
+) -> DataFrame:
+    """The RHP near-dup path behind :func:`embedding_near_dup_lsh` and the
+    SemDeDup LSH prune: normalized band signatures, self-join bucket
+    candidates, unit-vector dot verify -> (id_a, id_b, sim). A
+    ``group_col`` joins the bucket key, so pairs only form within a group
+    (SemDeDup's within-cluster contract)."""
     if dim is None:
         raise ValueError("dim (embedding dimensionality) required for the LSH path")
-    from newsify_spark.functions.vectors import dot
-
+    if bits_per_band is None:
+        bits_per_band = _auto_bits(n_rows if n_rows is not None else emb.count())
     # normalize=True: the verify step then needs one dot() aggregate per
     # candidate pair instead of cosine()'s three (sim is unchanged —
     # cosine of originals == dot of unit vectors)
@@ -282,35 +295,18 @@ def embedding_near_dup_lsh(
         emb.select(F.col(id_col), F.col(vec_col)),
         id_col, vec_col, dim, n_bands, bits_per_band, seed, normalize=True,
     )
+    keys = ["band", "sig"]
+    if group_col is not None:
+        sig = sig.join(emb.select(F.col(id_col), F.col(group_col)), id_col)
+        keys = [group_col, *keys]
     # the signature pass (scan + GEMM through mapInPandas) is the
-    # expensive stage and feeds BOTH sides of the self-join — persist it
-    # so it runs once, not once per side. MEMORY_AND_DISK via .persist()
-    # default; Spark evicts under pressure, callers may unpersist.
-    sig = sig.persist()
-    # candidate generation carries IDS ONLY: the bucket self-join and the
-    # distinct shuffle move 16-byte pairs, never vector payloads — at
-    # corpus scale the dedup shuffle is the widest stage and keeping
-    # vectors out of it is the difference between shuffling GB and TB
-    sized = sig.groupBy("band", "sig").agg(F.count("*").alias("n"))
-    ok = sized.filter(F.col("n").between(2, max_bucket)).select("band", "sig")
-    capped = sig.join(ok, ["band", "sig"], "left_semi")
-    a = capped.select("band", "sig", F.col(id_col).alias("id_a"))
-    b = capped.select("band", "sig", F.col(id_col).alias("id_b"))
-    cands = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # vectors rejoin per side for the verify step (plain equi joins on id;
-    # Spark broadcasts the vector side when it is small enough). Band 0 of
-    # the persisted signature table IS the unit-vector table — already
-    # materialized, so the norm is never recomputed per candidate pair.
-    unit = sig.filter(F.col("band") == 0).select(F.col(id_col), F.col(vec_col).alias("_uv"))
+    # expensive stage and feeds both sides of the self-join and the
+    # verify — an eager local checkpoint runs it once and leaves nothing
+    # in the CacheManager for a later query to pick up
+    sig = sig.localCheckpoint(eager=True)
+    cands = _bucket_candidates(sig, id_col, keys, max_bucket)
     return (
-        cands.join(unit.select(F.col(id_col).alias("id_a"), F.col("_uv").alias("va")), "id_a")
-        .join(unit.select(F.col(id_col).alias("id_b"), F.col("_uv").alias("vb")), "id_b")
-        .withColumn("sim", dot(F.col("va"), F.col("vb")))
+        _unit_dot(cands, sig, id_col, vec_col)
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
     )
@@ -487,9 +483,12 @@ def _sig_bands(sigs: DataFrame, id_col: str, num_hashes: int, band_size: int) ->
     self-join (lsh_candidate_pairs) and cross-set (incremental) paths.
 
     One pass: explode an array of (band, bucket) structs instead of a
-    union of n_bands scans (r13, guide §1.2) — the upstream signature
-    DAG (shingle + explode + 16-way min groupBy) is evaluated ONCE, not
-    once per band; identical output rows."""
+    union of n_bands selects; identical output rows. In the AQE plan of
+    lsh_candidate_pairs each consumer (either join side's bucket rows,
+    the bucket sizing) scans the signature table once, where the union
+    scanned it n_bands times. A lazy signature DAG runs twice, under the
+    bucket rows (the second join side reuses that exchange) and under the
+    sizing, where the union ran it twice per band, on that band's hashes."""
     n_bands = num_hashes // band_size
     entries = [
         F.struct(
@@ -547,10 +546,7 @@ def incremental_dedup(
     cb = _sig_bands(corpus_sigs, id_col, num_hashes, band_size).withColumnRenamed(
         id_col, "corpus_id"
     )
-    sized = cb.groupBy("band", "bucket").agg(F.count("*").alias("n"))
-    ok = sized.filter(F.col("n") <= max_bucket).select("band", "bucket")
-    cb = cb.join(ok, ["band", "bucket"], "left_semi")
-    cand = nb.join(cb, ["band", "bucket"]).select("new_id", "corpus_id").distinct()
+    cand = _bucket_candidates(nb, "new_id", ["band", "bucket"], max_bucket, cb, "corpus_id")
 
     eq_terms = [
         F.when(F.col(f"n_h{i}") == F.col(f"c_h{i}"), 1).otherwise(0)
@@ -941,7 +937,7 @@ def semantic_dedup(
     n_bands: int = 16,
     bits_per_band: int | None = None,
     seed: int = 42,
-    max_bucket: int = 10_000,
+    max_bucket: int = RHP_MAX_BUCKET,
 ) -> DataFrame:
     """SemDeDup-style clustered semantic dedup (Abbas et al., "SemDeDup",
     arXiv:2303.09540): assign every embedding to its nearest centroid,
@@ -1037,8 +1033,9 @@ def semantic_dedup(
             centroid_vec=centroid_vec,
         ).select(id_col, cluster_col)
     # members feeds the cluster-size probe, both prune sides, and the
-    # survivor anti join — persist so assignment runs once. The per-row
-    # L2 norm is computed HERE (n rows), not per pair (n²/k rows):
+    # survivor anti join — a local checkpoint, written by the probe's job,
+    # so assignment runs once and nothing stays in the CacheManager. The
+    # per-row L2 norm is computed HERE (n rows), not per pair (n²/k rows):
     # sim = dot/(na·nb) is the same float ops in the same order as
     # cosine(), so results stay bit-identical to the fold-form oracle
     # while the quadratic stage drops from three array folds per pair to
@@ -1048,16 +1045,14 @@ def semantic_dedup(
     members = (
         pts.join(assign, id_col)
         .withColumn("_n", l2_norm(F.col(vec_col)))
-        .persist()
+        .localCheckpoint(eager=False)
     )
-    max_sz = None
-    if prune_route == "auto" or max_cluster is not None:
-        max_sz = (
-            members.groupBy(cluster_col)
-            .agg(F.count("*").alias("n"))
-            .agg(F.max("n").alias("m"))
-            .first()["m"]
-        ) or 0
+    max_sz = (
+        members.groupBy(cluster_col)
+        .agg(F.count("*").alias("n"))
+        .agg(F.max("n").alias("m"))
+        .first()["m"]
+    ) or 0
     # auto only swaps when the caller supplied dim (the LSH route needs
     # the dimensionality); without it, big clusters still hit the
     # max_cluster fail-fast below rather than a surprise requirement
@@ -1071,10 +1066,9 @@ def semantic_dedup(
             "prune_route='lsh' before the quadratic within-cluster join"
         )
     if use_lsh:
-        losers = _semdedup_lsh_losers(
-            members, id_col, vec_col, cluster_col, threshold,
-            dim=dim, n_bands=n_bands, bits_per_band=bits_per_band,
-            seed=seed, max_bucket=max_bucket,
+        pairs = _rhp_near_dups(
+            members, id_col, vec_col, threshold, dim, n_bands, bits_per_band,
+            seed, max_bucket, group_col=cluster_col,
         )
     else:
         a = members.select(
@@ -1093,63 +1087,11 @@ def semantic_dedup(
             (F.col("na") > 0) & (F.col("nb") > 0),
             dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
         ).otherwise(F.lit(0.0))
-        losers = (
+        pairs = (
             a.join(b, cluster_col)
             .filter(F.col("id_a") < F.col("id_b"))
             .filter(sim >= threshold)
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
         )
+    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return members.join(losers, id_col, "left_anti").select(id_col, cluster_col)
 
-
-def _semdedup_lsh_losers(
-    members: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cluster_col: str,
-    threshold: float,
-    dim: int | None,
-    n_bands: int,
-    bits_per_band: int | None,
-    seed: int,
-    max_bucket: int,
-) -> DataFrame:
-    """Per-cluster LSH prune: random-hyperplane band signatures over the
-    members, candidate pairs from the (cluster, band, sig) bucket
-    self-join — SemDeDup's within-cluster-only contract rides the
-    cluster key — unit-vector dot verify, id_b losers. Candidate volume
-    is bucket-bounded instead of Σ|cluster|²; the shuffle carries ids
-    only."""
-    from newsify_spark.operators.similarity import rhp_signatures_pandas
-
-    if dim is None:
-        raise ValueError("dim (embedding dimensionality) required for the LSH prune")
-    if bits_per_band is None:
-        bits_per_band = _auto_bits(members.count())
-    sig = rhp_signatures_pandas(
-        members.select(F.col(id_col), F.col(vec_col)),
-        id_col, vec_col, dim, n_bands, bits_per_band, seed, normalize=True,
-    ).join(members.select(F.col(id_col), F.col(cluster_col)), id_col).persist()
-    sized = sig.groupBy(cluster_col, "band", "sig").agg(F.count("*").alias("n"))
-    ok = sized.filter(F.col("n").between(2, max_bucket)).select(cluster_col, "band", "sig")
-    capped = sig.join(ok, [cluster_col, "band", "sig"], "left_semi")
-    a = capped.select(cluster_col, "band", "sig", F.col(id_col).alias("id_a"))
-    b = capped.select(cluster_col, "band", "sig", F.col(id_col).alias("id_b"))
-    cands = (
-        a.join(b, [cluster_col, "band", "sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    from newsify_spark.functions.vectors import dot
-
-    unit = sig.filter(F.col("band") == 0).select(F.col(id_col), F.col(vec_col).alias("_uv"))
-    return (
-        cands.join(unit.select(F.col(id_col).alias("id_a"), F.col("_uv").alias("va")), "id_a")
-        .join(unit.select(F.col(id_col).alias("id_b"), F.col("_uv").alias("vb")), "id_b")
-        .withColumn("sim", dot(F.col("va"), F.col("vb")))
-        .filter(F.col("sim") >= threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )

@@ -19,12 +19,17 @@ Two scale regimes, same API:
   shrinks from |L|·|R| to the bucket collision set; the join is a plain
   equi hash join that AQE can handle/skew-split. Deterministic given
   ``seed``.
+
+Every LSH candidate join in the package (MinHash and incremental dedup,
+embedding near-dup, the SemDeDup prune, ``knn_join_lsh``) runs through
+ONE core, ``_bucket_candidates``, in one of two shapes: self-join or
+cross-set. The RHP paths verify with ``_unit_dot``.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from newsify_spark.functions.vectors import cosine, cosine_with_norms, dot, l2_dist, l2_norm
@@ -267,6 +272,66 @@ def rhp_signatures_pandas(
     )
 
 
+# Bucket cap of the RHP (embedding) LSH joins: a bucket past it is a block
+# of (near-)identical vectors, not work for a quadratic join.
+# ``knn_join_lsh``, whose buckets grow with the corpus, lifts it.
+RHP_MAX_BUCKET = 10_000
+
+
+def _bucket_candidates(
+    sig: DataFrame, id_col: str, keys: list[str], max_bucket: int,
+    right: DataFrame | None = None, right_id: str | None = None,
+) -> DataFrame:
+    """Distinct candidate id pairs from an LSH signature table, the one
+    bucket-join core: size the buckets with ``groupBy(keys).count``, drop
+    the oversized ones with a left-semi join BEFORE the equi join on
+    ``keys`` (the skew guard), and move ids only, never payloads.
+
+    - self-join (no ``right``): buckets with 2 <= n <= ``max_bucket``,
+      pairs (id_a, id_b) with id_a < id_b;
+    - cross-set: ``sig`` probes ``right`` (the store / item side), whose
+      buckets alone are capped, n <= ``max_bucket``; pairs
+      (``id_col``, ``right_id``), which must be distinct names.
+    """
+
+    def capped(side: DataFrame, keep: Column) -> DataFrame:
+        sized = side.groupBy(*keys).agg(F.count("*").alias("n"))
+        return side.join(sized.filter(keep).select(*keys), keys, "left_semi")
+
+    n = F.col("n")
+    if right is not None:
+        return sig.join(capped(right, n <= max_bucket), keys).select(id_col, right_id).distinct()
+    side = capped(sig, n.between(2, max_bucket))
+    a = side.select(*keys, F.col(id_col).alias("id_a"))
+    b = side.select(*keys, F.col(id_col).alias("id_b"))
+    return (
+        a.join(b, keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def _unit_dot(
+    pairs: DataFrame, sig: DataFrame, id_col: str, vec_col: str,
+    right: DataFrame | None = None, right_id: str | None = None, right_vec: str | None = None,
+) -> DataFrame:
+    """``pairs`` from :func:`_bucket_candidates` (same two shapes) + their
+    cosine ``sim``, read from normalized RHP tables: band 0 of each table
+    is its unit-vector table and joins once per pair side, so a pair costs
+    one ``dot`` and no norm."""
+    a, b = pairs.columns
+    if right is None:
+        right, right_id, right_vec = sig, id_col, vec_col
+    b0 = F.col("band") == 0
+    return (
+        pairs.join(sig.filter(b0).select(F.col(id_col).alias(a), F.col(vec_col).alias("_va")), a)
+        .join(right.filter(b0).select(F.col(right_id).alias(b), F.col(right_vec).alias("_vb")), b)
+        .withColumn("sim", dot(F.col("_va"), F.col("_vb")))
+        .drop("_va", "_vb")
+    )
+
+
 def knn_join_lsh(
     queries: DataFrame,
     items: DataFrame,
@@ -285,17 +350,18 @@ def knn_join_lsh(
     Each vector gets ``n_bands`` signatures of ``bits_per_band`` sign
     bits; candidates are pairs agreeing on at least one (band, signature)
     bucket; exact cosine reranks candidates. Recall rises with n_bands,
-    candidate count falls with bits_per_band. The bucket join is an equi
-    join on (band, sig) — shuffle-partitionable, AQE-skew-splittable.
+    candidate count falls with bits_per_band. The bucket join is the
+    cross-set shape of :func:`_bucket_candidates`. It drops an item bucket
+    past ``RHP_MAX_BUCKET`` AND past 16x the uniform share
+    n_items / 2**bits_per_band: a block of identical items goes, a corpus
+    whose buckets all grow with it at this fixed band width keeps them.
     """
     # normalize=True: cosine of the originals == dot of the unit vectors,
     # so the rerank needs ONE aggregate expression per pair, not three.
-    # Each signature table feeds both the bucket join (ids only) and the
-    # rerank (band 0 doubles as the unit-vector table): the ITEM side —
-    # the corpus-sized one whose GEMM pass is worth not repeating — is
-    # persisted (the embedding_near_dup_lsh shape); the query side is
-    # small by role, and the r12 persist-variant A/B showed caching it
-    # costs more than its recompute (see OPTIMIZATION_r12.md).
+    # Both signature tables feed the bucket join and the rerank: the
+    # corpus-sized ITEM side is a local checkpoint; the query side
+    # is small by role, and recomputing it was measured cheaper than
+    # materializing it (r12 persist-variant A/B, OPTIMIZATION_r12.md).
     qsig = rhp_signatures_pandas(
         queries.select(query_id, query_vec), query_id, query_vec, dim,
         n_bands, bits_per_band, seed, normalize=True,
@@ -303,25 +369,13 @@ def knn_join_lsh(
     isig = rhp_signatures_pandas(
         items.select(item_id, item_vec), item_id, item_vec, dim,
         n_bands, bits_per_band, seed, normalize=True,
-    ).persist()
-    # candidate generation carries IDS ONLY (r12, guide §2.3/§8): the
-    # before-plan shipped BOTH 64-dim vectors through the (band, sig)
-    # bucket shuffle — n_bands replicas of every vector — and again
-    # through the dedup exchange; at corpus scale those are the widest
-    # stages and vectors have no business in them.
-    cands = (
-        qsig.select("band", "sig", query_id)
-        .join(isig.select("band", "sig", item_id), ["band", "sig"])
-        .select(query_id, item_id)
-        .dropDuplicates([query_id, item_id])
-    )
-    qunit = qsig.filter(F.col("band") == 0).select(query_id, query_vec)
-    iunit = isig.filter(F.col("band") == 0).select(item_id, item_vec)
-    scored = (
-        cands.join(qunit, query_id)
-        .join(iunit, item_id)
-        .withColumn("score", dot(F.col(query_vec), F.col(item_vec)))
-        .select(query_id, item_id, "score")
+    ).localCheckpoint(eager=False)
+    # one row per (item, band); the count is the job that writes the
+    # checkpoint, so sizing the cap costs no job of its own
+    cap = max(RHP_MAX_BUCKET, 16 * (isig.count() // n_bands) >> bits_per_band)
+    cands = _bucket_candidates(qsig, query_id, ["band", "sig"], cap, isig, item_id)
+    scored = _unit_dot(cands, qsig, query_id, query_vec, isig, item_id, item_vec).select(
+        query_id, item_id, F.col("sim").alias("score")
     )
     return top_k_per_group(
         scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k

@@ -198,9 +198,8 @@ def ingest_batch(
                 words=words.select("word", "bits"),
                 m_bits=m_store,
             ).drop("text_hash")
-        # the prefiltered batch feeds EVERY downstream MinHash branch
-        # (16 band scans x 2 join sides) — materialize it so the probe's
-        # join/groupBy chain runs once, not once per branch
+        # the prefiltered batch feeds several MinHash branches —
+        # materialize it so the probe's join/groupBy chain runs once
         batch = batch.localCheckpoint(eager=True)
     # 1. within-batch near-dup (min-id survivor). Materialized: the store
     #    check below reads it from FIVE branches (signature pass, two

@@ -1148,10 +1148,13 @@ def test_neardup_lsh_bench_route_precision_and_recall(spark):
     assert recall >= 0.15, f"recall collapsed: {recall:.3f} ({len(lsh)}/{len(exact)})"
 
 
-def test_embedding_lsh_mega_bucket_guard(spark):
+def test_embedding_lsh_mega_bucket_guard(spark, monkeypatch):
     """A block of identical vectors (every band -> one mega bucket) must
     be dropped by max_bucket, not exploded into a quadratic candidate
-    join — identical vectors belong to the exact-dedup layer upstream."""
+    join — identical vectors belong to the exact-dedup layer upstream.
+    Both shapes: the near-dup self-join and the two-sided kNN join, whose
+    item side is capped at RHP_MAX_BUCKET."""
+    from newsify_spark.operators import similarity
     from newsify_spark.operators.dedup import embedding_near_dup_lsh
 
     n_dup, n_tail = 120, 40
@@ -1176,6 +1179,46 @@ def test_embedding_lsh_mega_bucket_guard(spark):
     ).count()
     assert uncapped >= n_dup * (n_dup - 1) // 2  # the mega block is real
     assert capped < 1000  # guard removed it; only the tail can pair
+
+    # two-sided: queries drawn from the block probe its mega item bucket
+    q = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    items = emb.select(
+        F.col("vec_id").alias("item_id"), F.col("embedding").alias("item_vec")
+    )
+    assert similarity.knn_join_lsh(q, items, k=5, dim=8).count() == 10 * 5
+    monkeypatch.setattr(similarity, "RHP_MAX_BUCKET", 100)
+    # every bucket of a block query holds the whole block: all dropped
+    assert similarity.knn_join_lsh(q, items, k=5, dim=8).count() == 0
+
+
+def test_knn_lsh_cap_grows_with_corpus(spark, monkeypatch):
+    """At a fixed band width every kNN item bucket grows with the corpus:
+    a uniform item side whose buckets all pass RHP_MAX_BUCKET is not skew,
+    and every query must still get its k neighbours."""
+    import numpy as np
+
+    from newsify_spark.operators import similarity
+
+    rng = np.random.default_rng(7)
+    vecs = rng.standard_normal((2000, 16)).tolist()
+    items = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)], "item_id long, item_vec array<double>"
+    )
+    q = items.filter(F.col("item_id") < 20).select(
+        F.col("item_id").alias("query_id"), F.col("item_vec").alias("query_vec")
+    )
+    monkeypatch.setattr(similarity, "RHP_MAX_BUCKET", 4)
+    sizes = (
+        similarity.rhp_signatures_pandas(items, "item_id", "item_vec", 16, 8, 8, 42)
+        .groupBy("band", "sig")
+        .count()
+    )
+    # the case is real: most item buckets are over the constant cap
+    assert sizes.filter(F.col("count") > 4).count() > sizes.count() // 2
+    out = similarity.knn_join_lsh(q, items, k=5, dim=16)
+    assert out.groupBy("query_id").count().filter(F.col("count") == 5).count() == 20
 
 
 def test_auto_bits_tracks_corpus_size(spark):

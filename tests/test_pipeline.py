@@ -98,8 +98,8 @@ def test_incremental_summarization(spark):
 
 def test_pipeline_caches_nothing(spark, tmp_path, monkeypatch):
     """The batch pipeline hands its stages off as eager local checkpoints:
-    a full run_pipeline plus the flagship query never calls persist or
-    cache and leaves the session CacheManager empty."""
+    a full run_pipeline plus the flagship and LSH / SemDeDup queries never
+    call persist or cache and leave the session CacheManager empty."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from newsify_spark.pipeline import run_pipeline
@@ -116,9 +116,8 @@ def test_pipeline_caches_nothing(spark, tmp_path, monkeypatch):
         monkeypatch.setattr(DataFrame, name, spy)
 
     run_pipeline(spark, SF_DIR, str(tmp_path / "gold"))
-    REGISTRY["rec_hybrid_topk"].fn(spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    for name in ("rec_hybrid_topk", "doc_neardup_lsh", "ml_ann_lsh_topk", "doc_semdedup"):
+        REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
     assert not calls, calls
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
