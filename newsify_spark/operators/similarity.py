@@ -6,33 +6,48 @@ Re-expresses the reference's FAISS + sklearn machinery:
 - J5 k-NN top-k (recommendation-trainer.py:89-100, FAISS IndexFlatL2
   top-50; batch-cluster-service.py:72-102 index maintenance).
 
-Two scale regimes, same API:
-- ``knn_join`` — exact brute force: broadcast the smaller side, cosine as
-  a codegen'd higher-order expression, window top-k. Correct + oracle
-  checkable; right whenever one side fits in a broadcast (centroids,
-  users-of-one-tenant...). Cost O(|L|·|R|·d) FLOPs but embarrassingly
-  parallel: on a 1000-executor cluster the big side stays partitioned and
-  never shuffles (the broadcast replaces a shuffle entirely).
-- ``knn_join_lsh`` — approximate: random-hyperplane LSH buckets both
-  sides, joins within (band, signature) buckets only, then exact rerank
-  inside the candidate set. This is the 100 TB path: the cross product
-  shrinks from |L|·|R| to the bucket collision set; the join is a plain
-  equi hash join that AQE can handle/skew-split. Deterministic given
-  ``seed``.
+Six kNN routes. Every caller pins its route: each takes its own index
+inputs (codebooks, cells, n_probe), so there is no dispatcher.
+- ``knn_join`` — exact expression form: broadcast the item side, cosine
+  as a codegen'd higher-order expression, window top-k. Oracle-exact.
+- ``knn_join_matmul`` — exact BLAS form: the capped query side rides the
+  task closure, one normalized GEMM per item Arrow batch.
+- ``knn_join_lsh`` — random-hyperplane LSH buckets on both sides, exact
+  rerank inside the candidate set; the path for when neither side
+  broadcasts.
+- ``knn_join_ivf`` — KMeans coarse cells; each query probes its
+  ``n_probe`` nearest and scores exact cosine within them.
+- ``knn_join_pq`` — product-quantized codes scanned with per-query
+  asymmetric-distance (ADC) tables, exact-cosine rerank of the shortlist.
+- ``knn_join_ivfpq`` — IVF cells + PQ codes: the same scan, gated to
+  each query's probed cells. Plain PQ is this with no cells.
+``knn_auto`` picks among the first three by input size.
 
-Every LSH candidate join in the package (MinHash and incremental dedup,
-embedding near-dup, the SemDeDup prune, ``knn_join_lsh``) runs through
-ONE core, ``_bucket_candidates``, in one of two shapes: self-join or
-cross-set. The RHP paths verify with ``_unit_dot``.
+Shared machinery, one implementation each:
+- ``_bucket_candidates`` (self-join or cross-set shape) and the
+  ``_unit_dot`` verify — every LSH candidate join in the package (MinHash
+  and incremental dedup, embedding near-dup, the SemDeDup prune,
+  ``knn_join_lsh``);
+- ``_collect_unit`` — the capped driver-side collect + unit-normalize of
+  the numpy routes;
+- ``_train_cells`` (KMeans coarse quantizer) and ``_assign_items_to_cells``
+  (top-n nearest-cell probe: item assignment and IVF query probe);
+- ``_adc_tables``, ``_ivfpq_scan_chunk`` (ADC scan + per-batch
+  shortlist) and ``_adc_knn`` (chunked scans + exact-cosine rerank),
+  shared by both PQ routes; ``_write_codebooks`` for both index savers.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from newsify_spark.functions.vectors import cosine, cosine_with_norms, dot, l2_dist, l2_norm
+from newsify_spark.functions.vectors import (
+    cosine, cosine_with_norms, dot, l2_dist, l2_norm, l2_normalize,
+)
 from newsify_spark.operators.topk import top_k_per_group
 
 METRICS = {"cosine": cosine, "l2": l2_dist, "dot": dot}
@@ -125,6 +140,22 @@ def nearest_centroid_assign(
     )
 
 
+def _collect_unit(
+    df: DataFrame, id_col: str, vec_col: str, cap: int | None, err: str = ""
+) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, unit vectors) of a driver-side table, in ``df``'s row order.
+    Past ``cap`` rows it raises ``ValueError(err)`` instead of OOMing the
+    driver (``cap=None``: uncapped). Zero vectors stay zero."""
+    side = df.select(id_col, vec_col)
+    rows = (side if cap is None else side.limit(cap + 1)).collect()
+    if cap is not None and len(rows) > cap:
+        raise ValueError(err)
+    mat = np.array([r[1] for r in rows] or np.empty((0, 0)), dtype=np.float64)
+    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
+    nrm[nrm == 0] = 1.0
+    return np.array([r[0] for r in rows]), mat / nrm
+
+
 def nearest_centroid_assign_matmul(
     points: DataFrame,
     centroids: DataFrame,
@@ -146,21 +177,13 @@ def nearest_centroid_assign_matmul(
     id-sorted centroids); zero vectors score 0.0 on both paths.
     Equality with the expression form is test-pinned.
     """
-    import numpy as np
     import pandas as pd
 
-    crows = centroids.select(centroid_id, centroid_vec).limit(max_centroids + 1).collect()
-    if len(crows) > max_centroids:
-        raise ValueError(
-            f"nearest_centroid_assign_matmul centroid side exceeds "
-            f"max_centroids={max_centroids}; use the expression form or LSH"
-        )
-    crows.sort(key=lambda r: r[0])
-    cids = np.array([r[0] for r in crows])
-    cmat = np.array([r[1] for r in crows], dtype=np.float64)
-    cnrm = np.linalg.norm(cmat, axis=1, keepdims=True)
-    cnrm[cnrm == 0] = 1.0
-    cunit = cmat / cnrm
+    cids, cunit = _collect_unit(
+        centroids.orderBy(centroid_id), centroid_id, centroid_vec, max_centroids,
+        f"nearest_centroid_assign_matmul centroid side exceeds "
+        f"max_centroids={max_centroids}; use the expression form or LSH",
+    )
 
     def part(it):
         for pdf in it:
@@ -382,6 +405,47 @@ def knn_join_lsh(
     )
 
 
+def _train_cells(
+    items: DataFrame, item_id: str, item_vec: str, n_cells: int, seed: int
+) -> DataFrame:
+    """(cell int, cell_vec array<double>): the KMeans coarse quantizer of
+    the IVF routes, trained on the unit-normalized items."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    feats = items.select(
+        F.col(item_id), array_to_vector(l2_normalize(item_vec)).alias("features")
+    )
+    km = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(feats)
+    trained = [(i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())]
+    return items.sparkSession.createDataFrame(trained, "cell int, cell_vec array<double>")
+
+
+def _assign_items_to_cells(
+    df: DataFrame, cells: DataFrame, id_col: str, vec_col: str,
+    n: int = 1, keep: tuple = (),
+) -> DataFrame:
+    """(id_col, *keep, cell): each row's ``n`` nearest cells by cosine
+    against the broadcast cell-centroid table, cell-id tiebreak. The one
+    nearest-cell probe: item assignment (n=1, the same deterministic rule
+    at build and at incremental add time, so an added vector lands in
+    exactly the cell a fresh build would pick) and the IVF query probe
+    (n=n_probe). ``keep`` may name the row's norm, ``_vn``."""
+    return (
+        df.withColumn("_vn", l2_norm(vec_col))
+        .crossJoin(F.broadcast(cells.withColumn("_cn", l2_norm("cell_vec"))))
+        .withColumn(
+            "csim", cosine_with_norms(F.col(vec_col), F.col("cell_vec"), "_vn", "_cn")
+        )
+        .transform(
+            lambda d: top_k_per_group(
+                d, [id_col], [F.col("csim").desc(), F.col("cell").asc()], n
+            )
+        )
+        .select(id_col, *keep, "cell")
+    )
+
+
 def knn_join_ivf(
     queries: DataFrame,
     items: DataFrame,
@@ -412,49 +476,17 @@ def knn_join_ivf(
     oracle-checkable (vec_knn_ivf rides this with rounded label
     centroids).
     """
-    spark = items.sparkSession
     if cells is None:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        from newsify_spark.functions.vectors import l2_normalize
-
-        feats = items.select(
-            F.col(item_id), array_to_vector(l2_normalize(item_vec)).alias("features")
-        )
-        km = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(feats)
-        trained = [(i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())]
-        cells = spark.createDataFrame(trained, "cell int, cell_vec array<double>")
+        cells = _train_cells(items, item_id, item_vec, n_cells, seed)
     # each side's L2 norm is computed once per ROW (item / query / cell)
     # and carried through the joins — the per-pair cosines then fold only
     # the dot product, bit-identical to the plain form (r12, guide §1.2)
-    cell_df = F.broadcast(cells.withColumn("_cn", l2_norm("cell_vec")))
-
-    item_cells = (
-        items.withColumn("_vn", l2_norm(item_vec))
-        .crossJoin(cell_df)
-        .withColumn(
-            "csim", cosine_with_norms(F.col(item_vec), F.col("cell_vec"), "_vn", "_cn")
-        )
-        .transform(
-            lambda df: top_k_per_group(
-                df, [item_id], [F.col("csim").desc(), F.col("cell").asc()], 1
-            )
-        )
-        .select(item_id, item_vec, "_vn", "cell")
+    item_cells = _assign_items_to_cells(
+        items, cells, item_id, item_vec, keep=(item_vec, "_vn")
     )
-    query_cells = (
-        queries.withColumn("_qn", l2_norm(query_vec))
-        .crossJoin(cell_df)
-        .withColumn(
-            "csim", cosine_with_norms(F.col(query_vec), F.col("cell_vec"), "_qn", "_cn")
-        )
-        .transform(
-            lambda df: top_k_per_group(
-                df, [query_id], [F.col("csim").desc(), F.col("cell").asc()], n_probe
-            )
-        )
-        .select(query_id, query_vec, "_qn", "cell")
+    query_cells = _assign_items_to_cells(
+        queries, cells, query_id, query_vec, n_probe,
+        keep=(query_vec, F.col("_vn").alias("_qn")),
     )
     cands = query_cells.join(item_cells, "cell").select(
         query_id, item_id, query_vec, item_vec, "_qn", "_vn"
@@ -520,24 +552,17 @@ def knn_join_matmul(
     product. Results are identical to knn_join (same ties: item_id asc),
     modulo float-summation order inside BLAS.
     """
-    import numpy as np
     import pandas as pd
 
     # the query side ships in every task closure — cap it explicitly so a
     # huge query side fails fast instead of OOMing the driver (VERDICT
     # round-1 What's-wrong #3); knn_auto reroutes oversized query sides
     # to the LSH path before ever reaching this collect
-    qrows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"knn_join_matmul query side exceeds max_queries={max_queries}; "
-            "use knn_join_lsh (or knn_auto, which routes by size)"
-        )
-    qids = np.array([r[0] for r in qrows])
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
-    qnorm[qnorm == 0] = 1.0
-    qunit = qmat / qnorm
+    qids, qunit = _collect_unit(
+        queries, query_id, query_vec, max_queries,
+        f"knn_join_matmul query side exceeds max_queries={max_queries}; "
+        "use knn_join_lsh (or knn_auto, which routes by size)",
+    )
 
     def part(it):
         for pdf in it:
@@ -566,13 +591,17 @@ def knn_join_matmul(
     )
 
 
+# knn_auto's route thresholds: the item rows the exact expression form
+# broadcasts, and the query x item pairs the exact forms score.
+KNN_BROADCAST_ROWS_MAX = 2_000_000
+KNN_EXACT_PAIRS_MAX = 50_000_000
+
+
 def knn_auto(
     queries: DataFrame,
     items: DataFrame,
     k: int,
     dim: int | None = None,
-    broadcast_rows_max: int = 2_000_000,
-    exact_pairs_max: int = 50_000_000,
     **kw,
 ) -> DataFrame:
     """Strategy-selecting kNN: the operator-level analogue of Catalyst's
@@ -585,18 +614,16 @@ def knn_auto(
     - both sides huge -> banded LSH (knn_join_lsh): approximate,
       shuffle-partitionable; requires ``dim``.
 
-    Counts come from .count() on the inputs (cheap: column-pruned scans);
-    pass precomputed sizes via kw['n_queries']/kw['n_items'] to skip.
+    Counts come from .count() on the inputs (cheap: column-pruned scans).
     """
-    nq = kw.pop("n_queries", None) or queries.count()
-    ni = kw.pop("n_items", None) or items.count()
+    nq, ni = queries.count(), items.count()
     max_queries = kw.pop("max_queries", 1_000_000)
     pairs = nq * ni
-    if ni <= broadcast_rows_max and pairs <= exact_pairs_max // 10:
+    if ni <= KNN_BROADCAST_ROWS_MAX and pairs <= KNN_EXACT_PAIRS_MAX // 10:
         return knn_join(queries, items, k, **kw)
     # the BLAS form ships the query side in every task closure — only
     # safe when the query side itself is bounded, not just the pair count
-    if pairs <= exact_pairs_max and nq <= max_queries:
+    if pairs <= KNN_EXACT_PAIRS_MAX and nq <= max_queries:
         return knn_join_matmul(queries, items, k, max_queries=max_queries, **kw)
     if dim is None:
         raise ValueError("dim required for the LSH path (both sides large)")
@@ -631,14 +658,7 @@ def pq_train(
     sample — LIMIT without ORDER BY is not stable across Spark plans);
     L2 on unit vectors ranks identically to cosine."""
     order_col = "item_id" if "item_id" in items.columns else items.columns[0]
-    rows = [
-        (r[1],)
-        for r in items.select(order_col, item_vec).orderBy(order_col).limit(sample).collect()
-    ]
-    X = np.array([r[0] for r in rows], dtype=np.float64)
-    nrm = np.linalg.norm(X, axis=1, keepdims=True)
-    nrm[nrm == 0] = 1.0
-    X = X / nrm
+    _, X = _collect_unit(items.orderBy(order_col).limit(sample), order_col, item_vec, None)
     d = X.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -694,6 +714,150 @@ def pq_encode(
     )
 
 
+# Query rows per ADC scan pass. The distance tables ride each scan task as
+# a |chunk| x m x kk float array: at the documented max_queries=100k with
+# m=16, kk=256 one pass would ship ~3.3 GB per task (VERDICT r6 #4); 10k
+# rows bound it to ~330 MB worst case, ~5 MB at serving-sized m=8.
+ADC_QUERY_CHUNK = 10_000
+
+
+def _adc_tables(Q: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """Asymmetric-distance lookup tables of unit queries ``Q``:
+    tables[q][j][c] = ||Q[q] subspace j - codebooks[j][c]||^2."""
+    m, kk, ds = codebooks.shape
+    tables = np.empty((len(Q), m, kk))
+    for j in range(m):
+        qs = Q[:, j * ds : (j + 1) * ds]
+        tables[:, j, :] = ((qs[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(-1)
+    return tables
+
+
+def _ivfpq_scan_chunk(
+    spark,
+    enc: DataFrame,
+    Q: np.ndarray,
+    qids: np.ndarray,
+    codebooks: np.ndarray,
+    n_cand: int,
+    query_id: str,
+    item_id: str,
+    cand_schema: str,
+    probe: tuple | None = None,
+) -> DataFrame:
+    """One ADC scan pass for a driver-bounded query chunk: mapInPandas
+    over the code table, estimated distance = sum of table lookups over
+    each item's codes (no per-item float vector math), each Arrow batch
+    keeps its ``n_cand`` best per query. The closure is |chunk| x m x kk —
+    the caller bounds |chunk|. Returns (query_id, item_id, est).
+
+    ``probe`` = (cids, cunit, n_probe) is the IVF-PQ cell gate: each
+    query probes its ``n_probe`` nearest cells, the code table (which
+    must carry ``cell``) is left-semi pruned to the chunk's probed-cell
+    union, and a code outside a query's cells never reaches its
+    shortlist. ``probe=None`` is plain PQ: every code is scanned."""
+    import pandas as pd
+
+    m = codebooks.shape[0]
+    tables = _adc_tables(Q, codebooks)
+    mask = pos = None
+    if probe is not None:
+        cids, cunit, n_probe = probe
+        pos = {int(c): i for i, c in enumerate(cids)}
+        probe_idx = np.argsort(-(Q @ cunit.T), axis=1, kind="stable")[:, :n_probe]
+        mask = np.zeros((len(Q), len(cids)), dtype=bool)  # |chunk| x n_cells
+        np.put_along_axis(mask, probe_idx, True, axis=1)
+        # prune the code table to cells THIS chunk probes (partition
+        # pruning at scale when the code store is partitioned by cell)
+        union_cells = spark.createDataFrame(
+            [(int(c),) for c in sorted({int(c) for c in cids[probe_idx].ravel()})], "cell int"
+        )
+        enc = enc.join(F.broadcast(union_cells), "cell", "left_semi")
+
+    def scan(it):
+        for pdf in it:
+            if not len(pdf):
+                continue
+            ids = pdf[item_id].to_numpy()
+            codes = np.array(list(pdf["codes"]), dtype=np.int64)  # |batch| x m
+            est = tables[:, np.arange(m)[None, :], codes].sum(-1)  # |chunk| x |batch|
+            if mask is not None:  # per-query cell gate
+                cellpos = np.array([pos[int(c)] for c in pdf["cell"]], dtype=np.int64)
+                est = np.where(mask[:, cellpos], est, np.inf)
+            nc = min(n_cand, est.shape[1])
+            idx = np.argpartition(est, nc - 1, axis=1)[:, :nc]
+            vals = np.take_along_axis(est, idx, axis=1)
+            keep = np.isfinite(vals)
+            if not keep.any():
+                continue
+            qrep = np.repeat(qids, nc).reshape(len(qids), nc)
+            yield pd.DataFrame(
+                {
+                    query_id: qrep[keep].ravel(),
+                    item_id: ids[idx][keep].ravel(),
+                    "est": vals[keep].ravel(),
+                }
+            )
+
+    return enc.mapInPandas(scan, schema=cand_schema)
+
+
+def _adc_knn(
+    queries: DataFrame,
+    items: DataFrame,
+    enc: DataFrame,
+    k: int,
+    codebooks: np.ndarray,
+    query_id: str,
+    item_id: str,
+    query_vec: str,
+    item_vec: str,
+    rerank_factor: int,
+    max_queries: int,
+    route: str,
+    probe: tuple | None = None,
+) -> DataFrame:
+    """The search both PQ routes run: fail-fast capped query collect,
+    ADC scans of ``ADC_QUERY_CHUNK`` queries each (independent scans
+    unioned into ONE lazy plan, a single job), a global shortlist of
+    k*rerank_factor per query, then an exact-cosine rerank of the
+    shortlist against the true vectors — approximate recall, exact
+    scores. Candidates move as ids, never vectors."""
+    spark = items.sparkSession
+    qids, Q = _collect_unit(
+        queries, query_id, query_vec, max_queries,
+        f"{route} query side exceeds max_queries={max_queries}",
+    )
+    n_cand = k * rerank_factor
+    q_dt = dict(queries.dtypes)[query_id]
+    i_dt = dict(enc.dtypes)[item_id]
+    cand_schema = f"{query_id} {q_dt}, {item_id} {i_dt}, est double"
+    step = ADC_QUERY_CHUNK
+    chunks = [
+        _ivfpq_scan_chunk(
+            spark, enc, Q[lo : lo + step], qids[lo : lo + step], codebooks,
+            n_cand, query_id, item_id, cand_schema, probe,
+        )
+        for lo in range(0, len(Q), step)
+    ]
+    cand = (
+        reduce(DataFrame.unionByName, chunks)
+        if chunks
+        else spark.createDataFrame([], cand_schema)
+    )
+    shortlist = top_k_per_group(
+        cand, [query_id], [F.col("est").asc(), F.col(item_id).asc()], n_cand
+    ).select(query_id, item_id)
+    scored = (
+        shortlist.join(F.broadcast(queries.select(query_id, query_vec)), query_id)
+        .join(items.select(item_id, item_vec), item_id)
+        .withColumn("score", cosine(F.col(query_vec), F.col(item_vec)))
+        .select(query_id, item_id, "score")
+    )
+    return top_k_per_group(
+        scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k
+    )
+
+
 def knn_join_pq(
     queries: DataFrame,
     items: DataFrame,
@@ -714,155 +878,15 @@ def knn_join_pq(
     per query are reranked with EXACT cosine against the true vectors
     (same contract as the LSH/IVF paths: approximate recall, exact
     scores). Pass ``encoded_items`` to reuse a stored code table — the
-    production shape, where encoding happens once at ingest."""
-    import pandas as pd
-
-    m, kk, ds = codebooks.shape
-    qrows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(f"knn_join_pq query side exceeds max_queries={max_queries}")
-    qids = np.array([r[0] for r in qrows])
-    Q = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    Q = Q / qn
-    # tables[q][j][c] = ||Q[q] subspace j - codebook[j][c]||^2
-    tables = np.empty((len(Q), m, kk))
-    for j in range(m):
-        qs = Q[:, j * ds : (j + 1) * ds]
-        tables[:, j, :] = ((qs[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(-1)
-
+    production shape, where encoding happens once at ingest. This is
+    :func:`knn_join_ivfpq` with no cells: the same :func:`_adc_knn`."""
     enc = encoded_items if encoded_items is not None else pq_encode(
         items, codebooks, item_id=item_id, item_vec=item_vec
     )
-    n_cand = k * rerank_factor
-
-    def scan(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            ids = pdf[item_id].to_numpy()
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)  # |batch| x m
-            # est[q][i] = sum_j tables[q][j][codes[i][j]]
-            est = tables[:, np.arange(m)[None, :], codes].sum(-1)  # |Q| x |batch|
-            nc = min(n_cand, est.shape[1])
-            idx = np.argpartition(est, nc - 1, axis=1)[:, :nc]
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(qids, nc),
-                    item_id: ids[idx].ravel(),
-                    "est": np.take_along_axis(est, idx, axis=1).ravel(),
-                }
-            )
-
-    q_dt = dict(queries.dtypes)[query_id]
-    i_dt = dict(enc.dtypes)[item_id]
-    cand = enc.mapInPandas(scan, schema=f"{query_id} {q_dt}, {item_id} {i_dt}, est double")
-    # partition-local candidates -> global shortlist, then exact rerank
-    shortlist = top_k_per_group(
-        cand, [query_id], [F.col("est").asc(), F.col(item_id).asc()], n_cand
-    ).select(query_id, item_id)
-    qdf = queries.select(query_id, query_vec)
-    scored = (
-        shortlist.join(F.broadcast(qdf), query_id)
-        .join(items.select(item_id, item_vec), item_id)
-        .withColumn("score", METRICS["cosine"](F.col(query_vec), F.col(item_vec)))
-        .select(query_id, item_id, "score")
+    return _adc_knn(
+        queries, items, enc, k, codebooks, query_id, item_id, query_vec, item_vec,
+        rerank_factor, max_queries, "knn_join_pq",
     )
-    return top_k_per_group(
-        scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k
-    )
-
-
-def _assign_items_to_cells(
-    items: DataFrame, cells: DataFrame, item_id: str, item_vec: str
-) -> DataFrame:
-    """(item_id, cell) coarse assignment: cosine argmax against the
-    broadcast cell-centroid table, cell-id tiebreak — the same
-    deterministic rule at build time and at incremental add time, so an
-    added vector lands in exactly the cell a fresh build would pick."""
-    return (
-        items.withColumn("_vn", l2_norm(item_vec))
-        .crossJoin(F.broadcast(cells.withColumn("_cn", l2_norm("cell_vec"))))
-        .withColumn(
-            "csim", cosine_with_norms(F.col(item_vec), F.col("cell_vec"), "_vn", "_cn")
-        )
-        .transform(
-            lambda df: top_k_per_group(
-                df, [item_id], [F.col("csim").desc(), F.col("cell").asc()], 1
-            )
-        )
-        .select(item_id, "cell")
-    )
-
-
-def _ivfpq_scan_chunk(
-    spark,
-    enc: DataFrame,
-    Q: np.ndarray,
-    qids: np.ndarray,
-    codebooks: np.ndarray,
-    cids: np.ndarray,
-    cunit: np.ndarray,
-    pos: dict[int, int],
-    n_probe: int,
-    n_cand: int,
-    query_id: str,
-    item_id: str,
-    cand_schema: str,
-) -> DataFrame:
-    """One ADC scan pass for a driver-bounded query chunk: probe each
-    query's ``n_probe`` nearest cells, semi-prune the code table to the
-    chunk's probed-cell union, and mapInPandas-scan codes with the
-    chunk's asymmetric-distance tables (closure size |chunk| x m x kk —
-    the caller bounds |chunk|). Returns (query_id, item_id, est)."""
-    import pandas as pd
-
-    m, kk, ds = codebooks.shape
-    qsim = Q @ cunit.T  # |chunk| x n_cells
-    probe_idx = np.argsort(-qsim, axis=1, kind="stable")[:, :n_probe]
-    probed_cells = cids[probe_idx]  # |chunk| x n_probe
-    mask = np.zeros((len(Q), len(cids)), dtype=bool)
-    for qi in range(len(Q)):
-        for c in probed_cells[qi]:
-            mask[qi, pos[int(c)]] = True
-    tables = np.empty((len(Q), m, kk))
-    for j in range(m):
-        qs = Q[:, j * ds : (j + 1) * ds]
-        tables[:, j, :] = ((qs[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(-1)
-
-    # prune the code table to cells THIS chunk probes (partition pruning
-    # at scale when the code store is partitioned by cell)
-    union_cells = spark.createDataFrame(
-        [(int(c),) for c in sorted({int(c) for c in probed_cells.ravel()})], "cell int"
-    )
-    enc = enc.join(F.broadcast(union_cells), "cell", "left_semi")
-
-    def scan(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            ids = pdf[item_id].to_numpy()
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)
-            cellpos = np.array([pos[int(c)] for c in pdf["cell"]], dtype=np.int64)
-            est = tables[:, np.arange(m)[None, :], codes].sum(-1)  # |chunk| x |batch|
-            est = np.where(mask[:, cellpos], est, np.inf)  # per-query cell gate
-            nc = min(n_cand, est.shape[1])
-            idx = np.argpartition(est, nc - 1, axis=1)[:, :nc]
-            vals = np.take_along_axis(est, idx, axis=1)
-            keep = np.isfinite(vals)
-            if not keep.any():
-                continue
-            qrep = np.repeat(qids, nc).reshape(len(qids), nc)
-            yield pd.DataFrame(
-                {
-                    query_id: qrep[keep].ravel(),
-                    item_id: ids[idx][keep].ravel(),
-                    "est": vals[keep].ravel(),
-                }
-            )
-
-    return enc.mapInPandas(scan, schema=cand_schema)
 
 
 def knn_join_ivfpq(
@@ -881,7 +905,6 @@ def knn_join_ivfpq(
     seed: int = 42,
     cells: DataFrame | None = None,
     encoded_items: DataFrame | None = None,
-    query_chunk: int = 10_000,
 ) -> DataFrame:
     """FAISS IndexIVFPQ re-expressed: coarse-quantize items into
     ``n_cells`` (the IVF layer — same cell construction as
@@ -896,7 +919,7 @@ def knn_join_ivfpq(
     Distributed shape: the encoded-code table is left-semi pruned to the
     union of probed cells BEFORE the scan (partition pruning when codes
     are stored partitioned by cell), per-query cell restriction is a
-    boolean mask riding the closure (|Q| x n_cells bits), and the only
+    boolean mask riding the closure (|chunk| x n_cells bits), and the only
     shuffles are the shortlist top-k and the id-keyed rerank joins —
     candidates move as ids, never vectors. Approximate recall, exact
     scores (same contract as the LSH/IVF/PQ routes); recall floor pinned
@@ -908,85 +931,26 @@ def knn_join_ivfpq(
     supplied, nothing is trained at query time (encode-at-ingest,
     the production shape).
     """
-    spark = items.sparkSession
     if cells is None:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        from newsify_spark.functions.vectors import l2_normalize
-
-        feats = items.select(
-            F.col(item_id), array_to_vector(l2_normalize(item_vec)).alias("features")
-        )
-        km = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(feats)
-        trained = [(i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())]
-        cells = spark.createDataFrame(trained, "cell int, cell_vec array<double>")
-    crows = sorted(cells.collect(), key=lambda r: r["cell"])
-    cids = np.array([r["cell"] for r in crows])
-    cmat = np.array([r["cell_vec"] for r in crows], dtype=np.float64)
-    cnrm = np.linalg.norm(cmat, axis=1, keepdims=True)
-    cnrm[cnrm == 0] = 1.0
-    cunit = cmat / cnrm
-
-    # item -> cell assignment (broadcast argmax, same as knn_join_ivf)
-    item_cells = _assign_items_to_cells(items, cells, item_id, item_vec)
+        cells = _train_cells(items, item_id, item_vec, n_cells, seed)
+    cids, cunit = _collect_unit(cells.orderBy("cell"), "cell", "cell_vec", None)
     enc = encoded_items if encoded_items is not None else pq_encode(
         items, codebooks, item_id=item_id, item_vec=item_vec
     )
     if "cell" not in enc.columns:
-        enc = enc.join(item_cells, item_id)
-
-    # query side: driver-bounded collect (the serving-layer contract the
-    # PQ route already fail-fast caps), probe cells in numpy
-    m, kk, ds = codebooks.shape
-    qrows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(f"knn_join_ivfpq query side exceeds max_queries={max_queries}")
-    qids = np.array([r[0] for r in qrows])
-    Q = np.array([r[1] for r in qrows], dtype=np.float64).reshape(len(qrows), -1)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    Q = Q / qn
-    n_probe = min(n_probe, len(cids))
-    pos = {int(c): i for i, c in enumerate(cids)}
-    n_cand = k * rerank_factor
-    q_dt = dict(queries.dtypes)[query_id]
-    i_dt = dict(enc.dtypes)[item_id]
-    cand_schema = f"{query_id} {q_dt}, {item_id} {i_dt}, est double"
-
-    # The ADC tables ride each scan task as a |chunk| x m x kk float
-    # array — at the documented max_queries=100k cap with m=16, k=256
-    # that is ~3.3 GB, far past task size (VERDICT r6 #4). Chunk the
-    # query side: each chunk gets its own scan pass over the (cell-
-    # pruned) code table with a closure bounded by query_chunk rows
-    # (10k default ≈ 330 MB worst case, ~5 MB at serving-sized m=8).
-    # Chunks are independent scans unioned into ONE lazy plan — a
-    # single job, and each scan's semi-join prunes to only the cells
-    # that chunk's queries probe.
-    cand: DataFrame | None = None
-    step = max(1, query_chunk)
-    for lo in range(0, len(Q), step):
-        chunk = _ivfpq_scan_chunk(
-            spark, enc, Q[lo : lo + step], qids[lo : lo + step],
-            codebooks, cids, cunit, pos,
-            n_probe, n_cand, query_id, item_id, cand_schema,
-        )
-        cand = chunk if cand is None else cand.unionByName(chunk)
-    if cand is None:  # empty query side
-        cand = spark.createDataFrame([], cand_schema)
-    shortlist = top_k_per_group(
-        cand, [query_id], [F.col("est").asc(), F.col(item_id).asc()], n_cand
-    ).select(query_id, item_id)
-    qdf = queries.select(query_id, query_vec)
-    scored = (
-        shortlist.join(F.broadcast(qdf), query_id)
-        .join(items.select(item_id, item_vec), item_id)
-        .withColumn("score", METRICS["cosine"](F.col(query_vec), F.col(item_vec)))
-        .select(query_id, item_id, "score")
+        enc = enc.join(_assign_items_to_cells(items, cells, item_id, item_vec), item_id)
+    return _adc_knn(
+        queries, items, enc, k, codebooks, query_id, item_id, query_vec, item_vec,
+        rerank_factor, max_queries, "knn_join_ivfpq", (cids, cunit, min(n_probe, len(cids))),
     )
-    return top_k_per_group(
-        scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k
-    )
+
+
+def _write_codebooks(spark, path: str, codebooks: np.ndarray) -> None:
+    """``{path}/codebooks``: one parquet row per (subspace m, centroid k)."""
+    m, k, _ = codebooks.shape
+    rows = [(mi, ki, [float(x) for x in codebooks[mi, ki]]) for mi in range(m) for ki in range(k)]
+    cb = spark.createDataFrame(rows, "m int, k int, vec array<double>")
+    cb.coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
 
 
 def save_pq_index(
@@ -1002,14 +966,7 @@ def save_pq_index(
     rebuildable from the corpus, diffable, and readable by any engine.
     The original vector table is NOT needed again until an exact rerank
     is requested."""
-    m, k, ds = codebooks.shape
-    rows = [
-        (mi, ki, [float(x) for x in codebooks[mi, ki]])
-        for mi in range(m)
-        for ki in range(k)
-    ]
-    cb = spark.createDataFrame(rows, "m int, k int, vec array<double>")
-    cb.coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _write_codebooks(spark, path, codebooks)
     encoded_items.write.mode("overwrite").parquet(f"{path}/codes")
 
 
@@ -1044,14 +1001,7 @@ def save_ivfpq_index(
 
     ``encoded_items`` must carry a ``cell`` column (the assignment
     :func:`knn_join_ivfpq` computes); cells is (cell, cell_vec)."""
-    m, k, ds = codebooks.shape
-    rows = [
-        (mi, ki, [float(x) for x in codebooks[mi, ki]])
-        for mi in range(m)
-        for ki in range(k)
-    ]
-    cb = spark.createDataFrame(rows, "m int, k int, vec array<double>")
-    cb.coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _write_codebooks(spark, path, codebooks)
     cells.coalesce(1).write.mode("overwrite").parquet(f"{path}/cells")
     encoded_items.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/codes")
 

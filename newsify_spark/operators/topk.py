@@ -67,10 +67,3 @@ def global_top_k(
             )
         )
     return out
-
-
-def argmax_per_group(
-    df: DataFrame, group_cols: list[str], order_cols: list[Column]
-) -> DataFrame:
-    """Top-1 (the reference's np.argmax over similarities, W1)."""
-    return top_k_per_group(df, group_cols, order_cols, 1)

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""CPU-time measurement harness for noisy hosts (round 12).
+"""CPU-time measurement harness for noisy hosts.
 
 Wall-clock A/B on this sandbox is polluted by ambient host load (3-5x
 run-to-run swings observed mid-round). Total CPU seconds consumed by
@@ -10,6 +10,9 @@ cycles to our processes. This measures, per noop-sink pass, the delta
 of utime+stime summed over /proc for this process and every live
 descendant — the local-mode executor threads all live in the one JVM,
 so the subtree captures the whole computation.
+
+Every pass is cold: after it, the cached plans and every persisted RDD
+are dropped, so no pass reads a cache left behind by an earlier one.
 
 Usage: python scripts/cpu_measure.py q1 q2 ...   (passes via
 SPARK_GRAFT_BENCH_PASSES, default 3; prints JSON with cpu+wall lists).
@@ -75,6 +78,12 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def drop_caches(spark) -> None:
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+
+
 def main() -> None:
     names = sys.argv[1:]
     if not names:
@@ -85,7 +94,7 @@ def main() -> None:
         os.environ["SPARK_GRAFT_BLOOM_CACHE"] = tempfile.mkdtemp(
             prefix="newsify_measure_bloom_"
         )
-    spark = get_spark("newsify_cpu_measure_r12")
+    spark = get_spark("newsify_cpu_measure")
     force(spark.range(1_000_000).selectExpr("sum(id) AS s"))  # warmup
 
     out: dict[str, dict] = {}
@@ -99,6 +108,7 @@ def main() -> None:
             force(q.fn(spark, SF_DIR))
             wall.append(round(time.perf_counter() - t0, 3))
             cpu.append(round(subtree_cpu_seconds() - c0, 3))
+            drop_caches(spark)
             # deterministic structural counters — immune to host noise:
             # number of jobs/stages/tasks this pass actually ran
             st = spark.sparkContext.statusTracker()

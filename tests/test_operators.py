@@ -406,7 +406,8 @@ def test_minhash_impls_identical(spark):
     assert a.equals(b)
 
 
-def test_knn_auto_strategy_selection(spark):
+def test_knn_auto_strategy_selection(spark, monkeypatch):
+    from newsify_spark.operators import similarity
     from newsify_spark.operators.similarity import knn_auto
     from newsify_spark.tables import load
 
@@ -419,12 +420,14 @@ def test_knn_auto_strategy_selection(spark):
     small = knn_auto(q, items, k=3).toPandas()
     assert len(small) == 15
     # force the matmul path with a tiny pair budget — still exact
-    mm = knn_auto(q, items, k=3, exact_pairs_max=2600).toPandas()
+    monkeypatch.setattr(similarity, "KNN_EXACT_PAIRS_MAX", 2600)
+    mm = knn_auto(q, items, k=3).toPandas()
     a = small.sort_values(["query_id", "item_id"]).reset_index(drop=True)
     b = mm.sort_values(["query_id", "item_id"]).reset_index(drop=True)
     assert (a.item_id == b.item_id).all()
     # force the LSH path — approximate but runs
-    lsh = knn_auto(q, items, k=3, dim=64, exact_pairs_max=10).toPandas()
+    monkeypatch.setattr(similarity, "KNN_EXACT_PAIRS_MAX", 10)
+    lsh = knn_auto(q, items, k=3, dim=64).toPandas()
     assert (lsh.groupby("query_id").size() <= 3).all()
 
 
@@ -510,7 +513,7 @@ def test_knn_matmul_query_cap_raises(spark):
         knn_join_matmul(q, items, k=3, max_queries=10).count()
 
 
-def test_knn_auto_reroutes_oversized_query_side(spark):
+def test_knn_auto_reroutes_oversized_query_side(spark, monkeypatch):
     """knn_auto must never hand an over-cap query side to the matmul
     collect — it takes the LSH path instead."""
     from newsify_spark.operators import similarity
@@ -520,9 +523,10 @@ def test_knn_auto_reroutes_oversized_query_side(spark):
     q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
     items = emb.select(F.col("vec_id").alias("item_id"), F.col("embedding").alias("item_vec"))
     dim = len(emb.select("embedding").first()[0])
+    # forbid the broadcast-expression path
+    monkeypatch.setattr(similarity, "KNN_BROADCAST_ROWS_MAX", 0)
     out = similarity.knn_auto(
         q, items, k=3, dim=dim,
-        broadcast_rows_max=0,   # forbid the broadcast-expression path
         max_queries=10,         # query side (500) exceeds the closure cap
     )
     # LSH path ran and produced ranked rows without raising
@@ -930,11 +934,12 @@ def test_ivfpq_knn_recall_exact_scores_and_full_probe(spark):
 
 
 def test_ivfpq_query_chunking_bounds_closure(spark, monkeypatch):
-    """query_chunk splits the ADC scan into per-chunk passes so the
+    """ADC_QUERY_CHUNK splits the ADC scan into per-chunk passes so the
     distance-table closure stays |chunk| x m x kk (VERDICT r6 #4 — at
     the 100k cap a single closure was ~3.3 GB per task) WITHOUT
     changing results: chunk-of-3 == single-chunk, and the pass count is
-    ceil(|Q| / query_chunk)."""
+    ceil(|Q| / ADC_QUERY_CHUNK), none for an empty query side. Both PQ
+    routes run the chunked scan."""
     import newsify_spark.operators.similarity as S
     from newsify_spark.tables import load
 
@@ -953,19 +958,29 @@ def test_ivfpq_query_chunking_bounds_closure(spark, monkeypatch):
         return real(spark_, enc, Q, qids, *a, **kw)
 
     monkeypatch.setattr(S, "_ivfpq_scan_chunk", counting)
-    kw = dict(k=6, codebooks=books, n_cells=8, n_probe=3, rerank_factor=4)
-    one = (
-        S.knn_join_ivfpq(q, items, query_chunk=10_000, **kw)
-        .toPandas().sort_values(["query_id", "item_id"]).reset_index(drop=True)
-    )
-    assert calls == [10]  # one pass holds all 10 queries
-    calls.clear()
-    chunked = (
-        S.knn_join_ivfpq(q, items, query_chunk=3, **kw)
-        .toPandas().sort_values(["query_id", "item_id"]).reset_index(drop=True)
-    )
-    assert calls == [3, 3, 3, 1]  # ceil(10/3) bounded passes
-    assert one.equals(chunked)
+    routes = [
+        (S.knn_join_ivfpq, dict(k=6, codebooks=books, n_cells=8, n_probe=3, rerank_factor=4)),
+        (S.knn_join_pq, dict(k=6, codebooks=books, rerank_factor=4)),
+    ]
+    for route, kw in routes:
+        calls.clear()
+        monkeypatch.setattr(S, "ADC_QUERY_CHUNK", 10_000)
+        one = (
+            route(q, items, **kw)
+            .toPandas().sort_values(["query_id", "item_id"]).reset_index(drop=True)
+        )
+        assert calls == [10], route.__name__  # one pass holds all 10 queries
+        calls.clear()
+        monkeypatch.setattr(S, "ADC_QUERY_CHUNK", 3)
+        chunked = (
+            route(q, items, **kw)
+            .toPandas().sort_values(["query_id", "item_id"]).reset_index(drop=True)
+        )
+        assert calls == [3, 3, 3, 1], route.__name__  # ceil(10/3) bounded passes
+        assert one.equals(chunked), route.__name__
+        calls.clear()
+        assert route(q.limit(0), items, **kw).count() == 0, route.__name__
+        assert calls == [], route.__name__  # an empty query side scans nothing
 
 
 def test_semantic_dedup_ivf_assignment_never_drops_points(spark, monkeypatch):
