@@ -5,6 +5,9 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
+``compiles`` maps each query to the generated classes every pass compiled
+(codegen-cache misses, from Spark's ``CodegenMetrics``).
+
 Execution is forced through the noop sink so every output column is
 materialized (a bare count() would let Spark prune the projections).
 
@@ -25,7 +28,7 @@ import sys
 import time
 
 from newsify_spark.queries import REGISTRY
-from newsify_spark.session import get_spark
+from newsify_spark.session import codegen_compiles, get_spark
 from newsify_spark.tables import DEFAULT_SF_DIR
 
 
@@ -80,14 +83,23 @@ def main() -> None:
     names = sorted(n for n, q in REGISTRY.items() if q.bench)
     passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
     runs: list[dict[str, float]] = []
+    # per query, the generated classes each pass compiled (codegen-cache
+    # misses): pass 1 is cold, later passes should compile ~nothing
+    compiles: dict[str, list[int]] = {name: [] for name in names}
     for p in range(passes):
         pass_t: dict[str, float] = {}
         for name in names:
             q = REGISTRY[name]
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             force(q.fn(spark, sf_dir))
             pass_t[name] = round(time.perf_counter() - t0, 3)
-            print(f"# pass {p + 1}/{passes} {name}: {pass_t[name]}s", file=sys.stderr)
+            compiles[name].append(codegen_compiles(spark) - c0)
+            print(
+                f"# pass {p + 1}/{passes} {name}: {pass_t[name]}s, "
+                f"{compiles[name][-1]} compiles",
+                file=sys.stderr,
+            )
         runs.append(pass_t)
     timings: dict[str, float] = {
         name: round(statistics.median(r[name] for r in runs), 3) for name in names
@@ -280,6 +292,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
+                "compiles": compiles,
                 "staging": staging,
                 "passes": passes,
                 "sf": sf,

@@ -20,17 +20,25 @@ strings is a valid MinHash permutation and — unlike murmur/xxhash — md5
 is bit-identical across Spark, DuckDB, and Python, which keeps the whole
 pipeline oracle-checkable.
 
-Scale notes: every step is shuffle-on-key (explode shingles -> groupBy
-doc; band join is an equi join). Hot buckets (boilerplate shingles) are
-the classic skew source: cap bucket size via a count filter before the
-join (``max_bucket`` arg) exactly like production MinHash pipelines
-drop stop-shingles.
+Scale notes: the MinHash signature is one row-local projection (no
+explode, no aggregation); the band join is an equi join. Hot buckets
+(boilerplate shingles) are the classic skew source: cap bucket size via
+a count filter before the join (``max_bucket`` arg) exactly like
+production MinHash pipelines drop stop-shingles.
 
 Every LSH path here gets its candidates from ONE core,
 ``similarity._bucket_candidates``: the self-join shape for
 ``lsh_candidate_pairs``, ``embedding_near_dup_lsh`` and the SemDeDup LSH
 prune, the cross-set shape (batch vs capped store) for
 ``incremental_dedup``. The embedding paths verify with ``_unit_dot``.
+
+One MinHash dedup path: ``minhash_dedup``, ``incremental_dedup`` and the
+streaming ingest (``streaming.ingest.ingest_batch``) all read a signature
+table from ``_signature_table`` (doc columns + the distinct shingle array
++ h0..h{K-1}) and decide with ``_near_dup_losers`` (within the table,
+exact Jaccard from the shingle arrays) and ``_store_dups`` (against a
+stored signature table, signature estimate). The ingest builds the table
+once per micro-batch and feeds both from it.
 """
 
 from __future__ import annotations
@@ -69,21 +77,68 @@ def minhash_signatures(
 ) -> DataFrame:
     """(doc_id, h0..h{K-1}) — MinHash signature row per doc.
 
-    Exploding shingles then one groupBy(doc) computes all K mins in a
-    single shuffle pass (each min is a partial agg)."""
-    shingled = docs.select(
-        F.col(id_col), F.explode(F.array_distinct(word_shingles(text_col, shingle_n))).alias("shingle")
+    One row-local projection, no explode and no aggregation: per seed,
+    ``transform`` md5s the doc's distinct shingle array, and ``array_min``
+    of each 16-hex half of the digests gives two hash positions. One row
+    out per input row, so ids are expected unique (as for every caller).
+    Like the pandas form, a scan with fewer partitions than the session's
+    parallelism is first spread by id (``_fan_out_scan``; a no-op at
+    scale), so a one-file corpus is not hashed in one task."""
+    docs = _fan_out_scan(docs.select(id_col, text_col), key=id_col)
+    return _signature_table(docs, text_col, num_hashes, shingle_n).select(
+        id_col, *[f"h{i}" for i in range(num_hashes)]
     )
-    # each md5 digest yields TWO independent 64-bit (16 hex char) hash
-    # values — halves the md5 calls, the dominant cost of the signature
-    # pass at corpus scale
-    aggs = []
-    for i in range(0, num_hashes, 2):
-        d = F.md5(F.concat(F.lit(f"{i // 2}|"), F.col("shingle")))
-        aggs.append(F.min(F.substring(d, 1, 16)).alias(f"h{i}"))
-        if i + 1 < num_hashes:
-            aggs.append(F.min(F.substring(d, 17, 16)).alias(f"h{i + 1}"))
-    return shingled.groupBy(id_col).agg(*aggs)
+
+
+def _signature_table(
+    docs: DataFrame, text_col: str, num_hashes: int, shingle_n: int
+) -> DataFrame:
+    """``docs`` + ``_sh`` (the distinct word-shingle array) + h0..h{K-1}.
+
+    Each md5 digest yields TWO 64-bit (16 hex char) hash positions, which
+    halves the md5 calls, the dominant cost of the pass. The digest arrays
+    are their own columns, so each is computed once for both halves
+    (the optimizer keeps a non-trivial projection that two consumers
+    reference, instead of inlining it into each)."""
+
+    def halves(seed: int) -> F.Column:
+        return F.transform("_sh", lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s)))
+
+    def array_min_of(digests: str, start: int) -> F.Column:
+        return F.array_min(F.transform(digests, lambda d: F.substring(d, start, 16)))
+
+    half = (num_hashes + 1) // 2
+    digests = docs.withColumn(
+        "_sh", F.array_distinct(word_shingles(text_col, shingle_n))
+    ).withColumns({f"_d{j}": halves(j) for j in range(half)})
+    return digests.withColumns(
+        {f"h{i}": array_min_of(f"_d{i // 2}", 1 + 16 * (i % 2)) for i in range(num_hashes)}
+    ).drop(*[f"_d{j}" for j in range(half)])
+
+
+def _near_dup_losers(
+    sig: DataFrame,
+    bands: DataFrame,
+    id_col: str,
+    threshold: float,
+    max_bucket: int = 1000,
+) -> DataFrame:
+    """Ids of the docs in a ``_signature_table`` that have a LOWER-id near
+    duplicate inside it: LSH self-join candidates from ``bands``
+    (``_sig_bands`` of ``sig``), verified by exact shingle-set Jaccard
+    from the ``_sh`` arrays (|A ∩ B| / (|A| + |B| - |A ∩ B|), the same
+    counts ``jaccard_pairs`` takes from exploded shingles)."""
+    cands = _bucket_candidates(bands, id_col, ["band", "bucket"], max_bucket)
+    sh = sig.select(id_col, "_sh")
+    inter = F.size(F.array_intersect("_sa", "_sb"))
+    jaccard = inter / (F.size("_sa") + F.size("_sb") - inter)
+    return (
+        cands.join(sh.toDF("id_a", "_sa"), "id_a")
+        .join(sh.toDF("id_b", "_sb"), "id_b")
+        .filter(jaccard >= threshold)
+        .select(F.col("id_b").alias(id_col))
+        .distinct()
+    )
 
 
 def lsh_candidate_pairs(
@@ -150,14 +205,19 @@ def minhash_dedup(
 ) -> DataFrame:
     """Full near-dup pipeline -> survivor rows (lowest id per duplicate
     group wins; groups are edges' connected pairs collapsed greedily to
-    min-id, one pass — adequate for near-dup graphs which are cliquey)."""
-    sigs = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_n)
-    cands = lsh_candidate_pairs(sigs, id_col, num_hashes, band_size)
-    dups = jaccard_pairs(docs, cands, id_col, text_col, shingle_n).filter(
-        F.col("jaccard") >= threshold
-    )
+    min-id, one pass — adequate for near-dup graphs which are cliquey).
+    Signatures, band self-join, exact Jaccard verify on the candidates.
+
+    The signature table feeds the bucket sizing, the bucket join and both
+    Jaccard sides. A projection has no exchange for AQE to reuse, so it is
+    materialized once (eager local checkpoint) instead of re-hashed per
+    branch."""
+    sig = _signature_table(
+        _fan_out_scan(docs.select(id_col, text_col), key=id_col), text_col, num_hashes, shingle_n
+    ).localCheckpoint(eager=True)
+    bands = _sig_bands(sig, id_col, num_hashes, band_size)
     # every doc that appears as the larger id of a dup edge is dropped
-    losers = dups.select(F.col("id_b").alias(id_col)).distinct()
+    losers = _near_dup_losers(sig, bands, id_col, threshold)
     return docs.join(losers, id_col, "left_anti")
 
 
@@ -360,10 +420,11 @@ def minhash_signatures_pandas(
 ) -> DataFrame:
     """Same signature definition as minhash_signatures (bit-identical
     output), computed in Python via mapInPandas: shingling + hashlib.md5
-    + per-doc mins in one Arrow batch pass, no explode/shuffle for the
-    signature itself. Wins when shingle-per-doc counts are high — the
-    JVM expression form materializes one row per (doc, shingle) through
-    a full shuffle; this form reduces to one row per doc map-side.
+    + per-doc mins in one Arrow batch pass. Both forms are row-local (one
+    row per doc, no shuffle); the JVM form hashes every (doc, shingle,
+    seed) in generated code, this one pays the Arrow round trip but
+    memoizes repeated shingles per task, so it skips most md5 calls on
+    natural text.
     """
     import hashlib
 
@@ -536,13 +597,34 @@ def incremental_dedup(
     drops degenerate boilerplate buckets on the store side before the
     join (same skew guard as lsh_candidate_pairs).
     """
+    # materialized once: the band join and the estimate both read it
     new_sigs = minhash_signatures(
         new_docs, id_col=id_col, text_col=text_col,
         num_hashes=num_hashes, shingle_n=shingle_n,
+    ).localCheckpoint(eager=True)
+    bands = _sig_bands(new_sigs, id_col, num_hashes, band_size)
+    dups = _store_dups(
+        new_sigs, bands, corpus_sigs, id_col, num_hashes, band_size, est_threshold, max_bucket
     )
-    nb = _sig_bands(new_sigs, id_col, num_hashes, band_size).withColumnRenamed(
-        id_col, "new_id"
-    )
+    return new_docs.join(dups, id_col, "left_anti")
+
+
+def _store_dups(
+    sig: DataFrame,
+    bands: DataFrame,
+    corpus_sigs: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    band_size: int,
+    est_threshold: float,
+    max_bucket: int = 1000,
+) -> DataFrame:
+    """Ids of the docs in signature table ``sig`` (banded as ``bands``)
+    whose MinHash estimate against some row of ``corpus_sigs`` reaches
+    ``est_threshold``: the cross-set bucket join (store buckets capped at
+    ``max_bucket``), then the fraction of equal hash positions. Decided
+    per document, so the ids do not depend on what else ``sig`` holds."""
+    nb = bands.withColumnRenamed(id_col, "new_id")
     cb = _sig_bands(corpus_sigs, id_col, num_hashes, band_size).withColumnRenamed(
         id_col, "corpus_id"
     )
@@ -553,22 +635,19 @@ def incremental_dedup(
         for i in range(num_hashes)
     ]
     est = sum(eq_terms[1:], eq_terms[0]) / F.lit(float(num_hashes))
-    ns = new_sigs.select(
+    ns = sig.select(
         F.col(id_col).alias("new_id"), *[F.col(f"h{i}").alias(f"n_h{i}") for i in range(num_hashes)]
     )
     cs = corpus_sigs.select(
         F.col(id_col).alias("corpus_id"), *[F.col(f"h{i}").alias(f"c_h{i}") for i in range(num_hashes)]
     )
-    dup_ids = (
+    return (
         cand.join(ns, "new_id")
         .join(cs, "corpus_id")
         .withColumn("est", est)
         .filter(F.col("est") >= est_threshold)
-        .select("new_id")
+        .select(F.col("new_id").alias(id_col))
         .distinct()
-    )
-    return new_docs.join(
-        dup_ids.withColumnRenamed("new_id", id_col), id_col, "left_anti"
     )
 
 

@@ -179,8 +179,9 @@ FROM sh GROUP BY doc_id
 )
 def doc_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    # Arrow form: bit-identical to DD.minhash_signatures, ~2x faster
-    # (equality pinned by test_minhash_impls_identical)
+    # Arrow form: bit-identical to DD.minhash_signatures (equality pinned
+    # by test_minhash_impls_identical); its per-task shingle memo skips
+    # the repeated md5s the row-local JVM projection recomputes
     return DD.minhash_signatures_pandas(docs, num_hashes=N_HASHES, shingle_n=3)
 
 
@@ -1404,7 +1405,11 @@ def doc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    corpus_sigs = DD.minhash_signatures(corpus, num_hashes=N_HASHES, shingle_n=3)
+    # the signature STORE: materialized once, as the ingest's parquet store
+    # is (the store-side bucket sizing, bucket join and estimate read it)
+    corpus_sigs = DD.minhash_signatures(corpus, num_hashes=N_HASHES, shingle_n=3).localCheckpoint(
+        eager=True
+    )
     survivors = DD.incremental_dedup(
         batch, corpus_sigs, num_hashes=N_HASHES, band_size=BAND, est_threshold=0.5
     )

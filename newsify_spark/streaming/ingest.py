@@ -1,5 +1,7 @@
-"""Streaming ingestion dedup: Structured Streaming front-end for
-``operators.dedup.incremental_dedup``.
+"""Streaming ingestion dedup: Structured Streaming front-end for the
+MinHash dedup of ``operators.dedup`` (the helpers behind
+``minhash_dedup`` within the batch and ``incremental_dedup`` against the
+store).
 
 The reference dedups at ingest with a Redis SET-NX per link
 (ingestion_service.py:74-77) — exact-URL only, single-node state. This
@@ -17,13 +19,20 @@ Per micro-batch:
    parquet partitions (one per batch, same idempotent overwrite
    contract) and loaded+bit_or-merged per trigger — m/64-bounded rows,
    never a rescan of the corpus key set;
-1. within-batch dedup (``minhash_dedup`` — two dups arriving together
-   would both pass the store check);
-2. cross-set LSH band join of the batch signatures vs the store,
-   signature-only Jaccard estimate, drop hits
-   (``incremental_dedup``);
-3. append survivors to ``out_path/batch=<id>/`` and their signatures to
-   ``store_path/batch=<id>/``.
+1. ONE signature pass over the prefiltered batch
+   (``operators.dedup._signature_table``: doc columns, ``text_hash``,
+   the distinct shingle array, h0..h15), checkpointed once; everything
+   below reads that checkpoint and its one band table;
+2. within-batch near-dups (two dups arriving together would both pass
+   the store check: LSH self-join, exact Jaccard from the shingle
+   arrays, ``_near_dup_losers``) and store dups (cross-set LSH band
+   join vs the store, signature-only Jaccard estimate, ``_store_dups``);
+   survivors are ONE anti-join on the union of the two id sets — a
+   store dup is decided per document, so the order of the two drops
+   does not matter;
+3. append survivors to ``out_path/batch=<id>/``, and their signatures
+   and text hashes (already in the survivors' checkpoint) to
+   ``store_path/batch=<id>/`` and the bloom word store.
 
 Idempotent restarts: foreachBatch can re-deliver a batch after a
 failure, so BOTH writes go to a batch-id subdirectory with
@@ -44,9 +53,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from newsify_spark.operators.dedup import (
-    incremental_dedup,
-    minhash_dedup,
-    minhash_signatures,
+    _near_dup_losers,
+    _sig_bands,
+    _signature_table,
+    _store_dups,
 )
 
 # reserved bloom-store partition id for the one-time migration build
@@ -150,7 +160,7 @@ def ingest_batch(
     #    shingle/MinHash stages. Pure cost optimization — output is
     #    unchanged (positives are verified exactly; an exact dup that
     #    somehow slipped through would still hit estimate 1.0 in the
-    #    incremental_dedup stage below). The bitmap is loaded from the
+    #    store-estimate stage below). The bitmap is loaded from the
     #    persisted word store (m/64-bounded read, replays excluded),
     #    NOT rebuilt from the corpus key set each trigger.
     pre_store = load_signature_store(
@@ -172,14 +182,13 @@ def ingest_batch(
         # and is excluded from exclude_batch filters only when asked.
         words = bloom_build_words(pre_store.select("text_hash"), "text_hash", m_store)
         save_bloom_partition(words, bloom_store_path, MIGRATION_BATCH_ID)
+    cols = batch.columns
+    hashed = batch.withColumn("text_hash", F.md5(F.col(text_col)))
     if words is not None:
         # the batch source feeds both sides of the prefilter's
-        # definitely-new/maybe split AND the MinHash stages below —
-        # materialize it once so the source isn't evaluated per branch
-        # (ADVICE r5)
-        hashed = batch.withColumn("text_hash", F.md5(F.col(text_col))).localCheckpoint(
-            eager=True
-        )
+        # definitely-new/maybe split — materialize it once so the source
+        # isn't evaluated per branch (ADVICE r5)
+        hashed = hashed.localCheckpoint(eager=True)
         # small store: collect the m/64-bounded words into a plan-literal
         # bitmap (zero-shuffle codegen probe); big store: the words table
         # stays distributed and the relational probe joins it as data.
@@ -187,92 +196,65 @@ def ingest_batch(
         # anti-join, probing the store's single hash column.
         if m_store // 64 <= LITERAL_MAX_WORDS:
             bitmap = _words_to_bitmap(words.collect(), m_store)
-            batch = bloom_prefilter_dedup(
+            hashed = bloom_prefilter_dedup(
                 hashed, pre_store.select("text_hash"), "text_hash", bitmap=bitmap
-            ).drop("text_hash")
+            )
         else:
-            batch = bloom_prefilter_dedup(
+            hashed = bloom_prefilter_dedup(
                 hashed,
                 pre_store.select("text_hash"),
                 "text_hash",
                 words=words.select("word", "bits"),
                 m_bits=m_store,
-            ).drop("text_hash")
-        # the prefiltered batch feeds several MinHash branches —
-        # materialize it so the probe's join/groupBy chain runs once
-        batch = batch.localCheckpoint(eager=True)
-    # 1. within-batch near-dup (min-id survivor). Materialized: the store
-    #    check below reads it from FIVE branches (signature pass, two
-    #    band-join sides via the bucket sizing, the estimate join, the
-    #    final anti join) — as a lazy plan, each branch re-ran the whole
-    #    shingle/LSH/Jaccard DAG (~5x the per-batch jobs).
-    local = minhash_dedup(
-        batch,
-        id_col=id_col,
-        text_col=text_col,
-        threshold=jaccard_threshold,
-        num_hashes=num_hashes,
-        band_size=band_size,
-        shingle_n=shingle_n,
-    ).localCheckpoint(eager=True)
-    # 2. vs-store (signature-only estimate; excludes this batch's own
-    #    partition so a replay is deterministic)
-    store = pre_store.drop("text_hash") if "text_hash" in pre_store.columns else pre_store
-    survivors = incremental_dedup(
-        local,
-        store,
-        id_col=id_col,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        shingle_n=shingle_n,
-        band_size=band_size,
-        est_threshold=est_threshold,
+            )
+    # 1. the batch's ONE signature pass, materialized: the band table, the
+    #    Jaccard verify, the store estimate, the survivors and the store
+    #    write all read this checkpoint
+    sig = _signature_table(hashed, text_col, num_hashes, shingle_n).localCheckpoint(eager=True)
+    bands = _sig_bands(sig, id_col, num_hashes, band_size)
+    # 2. within-batch near-dups (min-id survivor) and store dups
+    #    (signature-only estimate; the store excludes this batch's own
+    #    partition so a replay is deterministic), dropped in one anti-join
+    drop = _near_dup_losers(sig, bands, id_col, jaccard_threshold).unionByName(
+        _store_dups(sig, bands, pre_store, id_col, num_hashes, band_size, est_threshold)
     )
-    # materialized once: it feeds the corpus write, the signature pass,
-    # the text-hash side and the bloom words
-    survivors = survivors.localCheckpoint(eager=True)
+    # materialized once: it feeds the corpus write, the signature-store
+    # write and the bloom words
+    survivors = sig.join(drop, id_col, "left_anti").localCheckpoint(eager=True)
+    kept = survivors.select(*cols)
     if txn_bronze:
         from newsify_spark.operators.txnlog import idempotent_append
 
         idempotent_append(
             spark,
             out_path,
-            survivors.withColumn("_batch", F.lit(int(batch_id))),
+            kept.withColumn("_batch", F.lit(int(batch_id))),
             app_id="ingest_bronze",
             batch_id=int(batch_id),
         )
     else:
-        survivors.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
-    sigs = minhash_signatures(
-        survivors,
-        id_col=id_col,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        shingle_n=shingle_n,
-    )
-    # text_hash rides along for the next batch's bloom fast path
-    # (broadcast-join back — sigs and the hash side are both
-    # batch-sized)
-    hashes = survivors.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
-    sigs.join(F.broadcast(hashes), id_col).write.mode("overwrite").parquet(
-        f"{store_path}/batch={batch_id}"
-    )
+        kept.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
+    # 3. signatures + text_hash (the next batch's bloom fast path) to the
+    #    store, straight from the survivors' checkpoint
+    survivors.select(
+        id_col, *[f"h{i}" for i in range(num_hashes)], "text_hash"
+    ).write.mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
     # the admitted hashes' bloom words join the persisted bitmap
     # store (m/64-bounded rows; same idempotent batch partition)
     save_bloom_partition(
-        bloom_build_words(hashes.select("text_hash"), "text_hash", m_store),
+        bloom_build_words(survivors.select("text_hash"), "text_hash", m_store),
         bloom_store_path,
         batch_id,
     )
     if txn_bronze:
         # the txnlog itself holds the written rows; the checkpointed
         # survivors are the same rows without a log read
-        return survivors
+        return kept
     # hand the caller the WRITTEN rows (identical by construction: the
     # overwrite above is the only writer of this partition) — a file
     # scan that does not depend on executor-local checkpoint blocks.
     # Explicit schema: an empty batch writes a _SUCCESS-only dir.
-    return spark.read.schema(survivors.schema).parquet(f"{out_path}/batch={batch_id}")
+    return spark.read.schema(kept.schema).parquet(f"{out_path}/batch={batch_id}")
 
 
 def expire_store_batches(

@@ -103,10 +103,11 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
     All steps are joins/aggregations — nothing is collected to the driver.
 
     Intermediates, the returned assignments and the new ``state.stories``
-    are local checkpoints (``localCheckpoint(eager=True)``): executor-local
-    blocks outside the CacheManager, freed by the ContextCleaner once
-    unreachable. The trade is lineage: a lost executor block fails the
-    batch instead of recomputing it. Under foreachBatch that is covered by
+    are local checkpoints (``localCheckpoint``, eager or written by the
+    batch's own ``count()``): executor-local blocks outside the
+    CacheManager, freed by the ContextCleaner once unreachable. The trade
+    is lineage: a lost executor block fails the batch instead of
+    recomputing it. Under foreachBatch that is covered by
     the same idempotent replay contract as ``streaming.ingest``: ``state``
     changes only after every checkpoint of the batch succeeded, so a
     batch that fails in here leaves ``state`` as it found it and the
@@ -115,31 +116,40 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
     pts = batch.select(F.col("article_id").alias("point_id"), F.col("embedding").alias("point_vec"))
 
     # matched, unmatched, fmatch and minted each feed several branches
-    # below, so each is materialized once as an eager local checkpoint:
+    # below, so each is materialized once as a local checkpoint:
     # later plans scan flat blocks instead of re-planning the nested
     # lineage at every reference, and nothing enters the CacheManager, so
-    # a long-running stream accumulates no cache entries
+    # a long-running stream accumulates no cache entries. unmatched and
+    # minted are written by the count() the batch needs anyway
+    # (``eager=False`` + ``count()``), so they cost no job of their own.
     have_state = state.stories is not None and not state.stories.isEmpty()
     if have_state:
         cents = state.stories.select(
             F.col("story_id").alias("centroid_id"), F.col("centroid").alias("centroid_vec")
         )
+        # unmatched stays an anti-join on pts, not a filter of a
+        # vector-carrying assignment checkpoint: a checkpoint keeps its
+        # plan's size estimate, and the assignment's is the points x
+        # stories crossJoin product, which would ride into the carried
+        # state and compound every batch (its digit count x4 per batch,
+        # planning time exploding within ~10 batches)
         assigned = nearest_centroid_assign(pts, cents, threshold=state.threshold)
         matched = assigned.filter("matched").localCheckpoint(eager=True)
-        unmatched = pts.join(
-            matched.select("point_id"), "point_id", "left_anti"
-        ).localCheckpoint(eager=True)
+        unmatched = pts.join(matched.select("point_id"), "point_id", "left_anti")
     else:
         matched = None
-        unmatched = pts.localCheckpoint(eager=True)
+        unmatched = pts
+    unmatched = unmatched.localCheckpoint(eager=False)
+    n_rows = unmatched.count()
 
     # ---- pass 2: in-batch leader election + re-assignment ----------------
     # pairwise near-neighbors among unmatched via the size-routed near-dup
     # operator: all-pairs exact for small remainders, RHP-LSH candidates +
     # exact verify for big (cold-start) batches — never an O(|U|^2)
-    # crossJoin at scale
-    dim_row = unmatched.select(F.size("point_vec").alias("d")).first()
-    dim = int(dim_row["d"]) if dim_row is not None else 0
+    # crossJoin at scale. Only the LSH route needs the dimension.
+    dim = 0
+    if n_rows > state.pass2_allpairs_max:
+        dim = int(unmatched.select(F.size("point_vec").alias("d")).first()["d"])
     sims = (
         neardup_auto(
             unmatched,
@@ -148,6 +158,7 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
             threshold=state.threshold,
             dim=dim,
             allpairs_rows_max=state.pass2_allpairs_max,
+            n_rows=n_rows,
         )
         .filter(F.col("sim") > state.threshold)  # reference compares strictly
         .select(F.col("id_b").alias("lid"), F.col("id_a").alias("eid"), "sim")
@@ -167,8 +178,8 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
     minters = unmatched.join(
         fmatch.select(F.col("lid").alias("point_id")), "point_id", "left_anti"
     )
-    minted = _mint_stories(minters, state.next_id).localCheckpoint(eager=True)
-    n_minted = minted.count()  # scalar agg, not a row collect
+    minted = _mint_stories(minters, state.next_id).localCheckpoint(eager=False)
+    n_minted = minted.count()  # writes the checkpoint; no row collect
 
     out_new = minted.select(
         F.col("seed_article").alias("article_id"),
@@ -313,38 +324,4 @@ def streaming_event_counts(
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window), "event_type")
         .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-    )
-
-
-def stream_stream_interval_join(
-    views: DataFrame,
-    clicks: DataFrame,
-    max_lag: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """T-extra: watermarked stream-stream interval join — each click
-    attaches to the same user's views from the preceding ``max_lag``
-    (attribution: which impression led to this click). Works unchanged on
-    batch OR streaming frames (tested for parity); on streams BOTH sides
-    carry watermarks so Spark can bound the join state and evict rows
-    older than the interval — the state-safe shape for an unbounded run.
-
-    Inputs: views(user_id, view_ts, view_id), clicks(user_id, click_ts,
-    click_id). Output: one row per (view, click) pair within the window.
-    """
-    v = views.withWatermark("view_ts", watermark) if views.isStreaming else views
-    c = clicks.withWatermark("click_ts", watermark) if clicks.isStreaming else clicks
-    return v.alias("v").join(
-        c.alias("c"),
-        F.expr(
-            f"""v.user_id = c.user_id
-            AND c.click_ts >= v.view_ts
-            AND c.click_ts <= v.view_ts + INTERVAL {max_lag}"""
-        ),
-    ).select(
-        F.col("v.user_id").alias("user_id"),
-        "view_id",
-        "click_id",
-        "view_ts",
-        "click_ts",
     )

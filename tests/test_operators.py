@@ -406,6 +406,34 @@ def test_minhash_impls_identical(spark):
     assert a.equals(b)
 
 
+def test_minhash_projection_edge_texts(spark):
+    """The row-local signature projection equals the pandas form on the
+    texts where shingling degenerates: empty, null, one token, fewer
+    tokens than ``shingle_n``, exactly ``shingle_n``, doubled spaces and
+    repeated shingles — one signature row per doc in every case."""
+    from newsify_spark.operators.dedup import (
+        minhash_signatures,
+        minhash_signatures_pandas,
+    )
+
+    texts = [
+        "",
+        None,
+        "word",
+        "two Words",
+        "exactly three words",
+        "a  b  c",
+        "la la la la la la",
+        " leading and trailing spaces ",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    for n in (1, 3):
+        a = minhash_signatures(docs, shingle_n=n).toPandas().sort_values("doc_id").reset_index(drop=True)
+        b = minhash_signatures_pandas(docs, shingle_n=n).toPandas().sort_values("doc_id").reset_index(drop=True)
+        assert len(a) == len(texts)
+        assert a.equals(b), (n, a, b)
+
+
 def test_knn_auto_strategy_selection(spark, monkeypatch):
     from newsify_spark.operators import similarity
     from newsify_spark.operators.similarity import knn_auto
