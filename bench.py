@@ -6,7 +6,9 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 ``compiles`` maps each query to the generated classes every pass compiled
-(codegen-cache misses, from Spark's ``CodegenMetrics``).
+(codegen-cache misses, from Spark's ``CodegenMetrics``), and ``jobs`` to
+the Spark jobs every pass ran (status tracker, one job group per query
+and pass).
 
 Execution is forced through the noop sink so every output column is
 materialized (a bare count() would let Spark prune the projections).
@@ -86,21 +88,27 @@ def main() -> None:
     # per query, the generated classes each pass compiled (codegen-cache
     # misses): pass 1 is cold, later passes should compile ~nothing
     compiles: dict[str, list[int]] = {name: [] for name in names}
+    jobs: dict[str, list[int]] = {name: [] for name in names}
+    sc = spark.sparkContext
     for p in range(passes):
         pass_t: dict[str, float] = {}
         for name in names:
             q = REGISTRY[name]
+            group = f"bench-{name}-pass{p + 1}"
+            sc.setJobGroup(group, group)
             c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             force(q.fn(spark, sf_dir))
             pass_t[name] = round(time.perf_counter() - t0, 3)
             compiles[name].append(codegen_compiles(spark) - c0)
+            jobs[name].append(len(sc.statusTracker().getJobIdsForGroup(group)))
             print(
                 f"# pass {p + 1}/{passes} {name}: {pass_t[name]}s, "
-                f"{compiles[name][-1]} compiles",
+                f"{compiles[name][-1]} compiles, {jobs[name][-1]} jobs",
                 file=sys.stderr,
             )
         runs.append(pass_t)
+    sc.setLocalProperty("spark.jobGroup.id", None)
     timings: dict[str, float] = {
         name: round(statistics.median(r[name] for r in runs), 3) for name in names
     }
@@ -293,6 +301,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "compiles": compiles,
+                "jobs": jobs,
                 "staging": staging,
                 "passes": passes,
                 "sf": sf,

@@ -100,20 +100,6 @@ def umap_hdbscan_refine(
     )
 
 
-def cluster_centroids(
-    emb: DataFrame, labels: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """(cluster, centroid) element-wise means (A2) for arbitrary labelings."""
-    j = emb.join(labels, id_col)
-    flat = j.select("cluster", F.posexplode(vec_col).alias("pos", "v"))
-    means = flat.groupBy("cluster", "pos").agg(F.avg("v").alias("m"))
-    return means.groupBy("cluster").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-        ).alias("centroid")
-    )
-
-
 def jaccard_match_scores(
     new_clusters: DataFrame,  # (member_id, cluster)
     old_stories: DataFrame,  # (member_id, story)

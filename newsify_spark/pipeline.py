@@ -7,11 +7,23 @@ Lakehouse layout (SURVEY §7.1): bronze (raw as ingested) → silver
 (deduped, enriched, clustered) → gold (stories, recommendations,
 user_embeddings-equivalent profiles, bias reports), all partitioned
 parquet. Each stage is a DataFrame function; this module only sequences
-and writes. A hand-off that feeds more than one consumer (the silver
-articles, the cluster membership, the story rollup, the flagship's
-interaction table) is an eager local checkpoint: materialized once,
-never entered into the session CacheManager, and freed by the
-ContextCleaner once unreachable, so a run leaves no cached plan behind.
+and writes. A hand-off that feeds more than one consumer is an eager
+local checkpoint: materialized once, never entered into the session
+CacheManager, and freed by the ContextCleaner once unreachable, so a run
+leaves no cached plan behind. The hand-offs are:
+
+- the silver articles (cluster, summarize);
+- the label centroids, built once from ``embeddings`` (story
+  assignment, the flagship's content score);
+- the cluster membership and the story rollup (silver and gold writes);
+- the interaction table, the one ``events`` scan and parse of the run
+  (the flagship's profiles, popularity, freshness and cold-start roster,
+  and the bias report's positive (user, item) pairs).
+
+So ``run_pipeline`` scans and parses ``events`` once and builds the
+centroids once. ``stage_cluster``, ``stage_recommend`` and ``stage_bias``
+stay callable on their own: they build the same inputs from ``sf_dir``
+and call the same cores.
 
 At 100 TB: articles partition by ingest date, events by event date,
 gold tables by run date; every stage below already keys its shuffles so
@@ -31,7 +43,13 @@ from newsify_spark.functions import text as TX
 from newsify_spark.ml.infer import embed_text_udf, ner_entities_udf, summarize_udf
 from newsify_spark.operators.dedup import exact_dedup
 from newsify_spark.operators.similarity import nearest_centroid_assign
-from newsify_spark.queries.recommend import hybrid_recommendations
+from newsify_spark.queries.mlops import bias_report, rec_bias_report
+from newsify_spark.queries.recommend import (
+    hybrid_recommendations,
+    hybrid_topk,
+    interactions_with_ts,
+)
+from newsify_spark.queries.vector import label_centroids
 from newsify_spark.tables import load
 
 
@@ -58,35 +76,30 @@ def stage_ingest(spark: SparkSession, sf_dir: str, embed_dim: int = 64) -> DataF
 
 
 def stage_cluster(articles: DataFrame, emb_table: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Silver: assign articles to stories (J4 against current centroids —
-    here seeded from the embeddings fixture labels), roll up story
-    centroid (A2) + entity union (A3) + membership arrays (E4).
+    """:func:`cluster_stories` against the label centroids of ``emb_table``."""
+    return cluster_stories(articles, label_centroids(emb_table))
+
+
+def cluster_stories(articles: DataFrame, cents: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Silver: assign articles to stories (J4 against the current
+    centroids ``cents`` (label, centroid) — here seeded from the
+    embeddings fixture labels), roll up story centroid (A2) + entity
+    union (A3) + membership arrays (E4).
 
     The article → story membership is materialized eagerly here (a local
     checkpoint), so the silver write and the story rollup share one
-    assignment instead of each re-running the centroid build and the
-    nearest-centroid join. The trade is lineage: a lost executor block
-    fails the run rather than recomputing, and a rerun is safe because
-    every pipeline write overwrites.
+    assignment instead of each re-running the nearest-centroid join. The
+    trade is lineage: a lost executor block fails the run rather than
+    recomputing, and a rerun is safe because every pipeline write
+    overwrites.
     """
-    from newsify_spark.operators.cluster import cluster_centroids
-
-    seed_labels = emb_table.select(
-        F.col("vec_id").alias("member_id"), F.col("label").alias("cluster")
-    )
-    seed_cents = cluster_centroids(
-        emb_table.select(F.col("vec_id").alias("member_id"), "embedding"),
-        seed_labels,
-        id_col="member_id",
-        vec_col="embedding",
-    ).select(
-        F.col("cluster").alias("centroid_id"), F.col("centroid").alias("centroid_vec")
-    )
     assigned = nearest_centroid_assign(
         articles.select(
             F.col("article_id").alias("point_id"), F.col("embedding").alias("point_vec")
         ),
-        seed_cents,
+        cents.select(
+            F.col("label").alias("centroid_id"), F.col("centroid").alias("centroid_vec")
+        ),
         threshold=0.2,  # fixture-scale τ (reference: 0.8 on real embeddings)
     )
     membership = assigned.select(
@@ -150,10 +163,15 @@ def stage_summarize(
 
 
 def stage_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gold recommendations: the flagship plan, reshaped to the reference's
-    gold schema (user_id, recommendations array<struct>, last_updated —
+    """Gold recommendations from ``sf_dir``: :func:`recommendations_gold`
+    of the flagship query."""
+    return recommendations_gold(hybrid_recommendations(spark, sf_dir))
+
+
+def recommendations_gold(flat: DataFrame) -> DataFrame:
+    """The flagship's rows reshaped to the reference's gold schema
+    (user_id, recommendations array<struct>, last_updated —
     recommendation-trainer.py:259-263)."""
-    flat = hybrid_recommendations(spark, sf_dir)
     return flat.groupBy("user_id").agg(
         F.array_sort(
             F.collect_list(F.struct("rnk", F.col("story").alias("story_id"), "score"))
@@ -163,8 +181,6 @@ def stage_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stage_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from newsify_spark.queries.mlops import rec_bias_report
-
     return rec_bias_report(spark, sf_dir)
 
 
@@ -179,13 +195,22 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, fl
 
     articles = stage_ingest(spark, sf_dir).localCheckpoint(eager=True)
     clock("silver_articles", articles)
-    emb_table = load(spark, sf_dir, "embeddings")
-    enriched, stories = stage_cluster(articles, emb_table)
+    emb = load(spark, sf_dir, "embeddings")
+    cents = label_centroids(emb).localCheckpoint(eager=True)
+    enriched, stories = cluster_stories(articles, cents)
     clock("silver_article_stories", enriched.drop("embedding", "entities"))
     stories = stories.localCheckpoint(eager=True)
     clock("gold_stories", stage_summarize(stories, articles))
-    clock("gold_recommendations", stage_recommend(spark, sf_dir))
-    clock("gold_bias_reports", stage_bias(spark, sf_dir))
+    inter_all = interactions_with_ts(load(spark, sf_dir, "events")).localCheckpoint(
+        eager=True
+    )
+    clock("gold_recommendations", recommendations_gold(hybrid_topk(inter_all, emb, cents)))
+    # rating is a sum of event weights, all >= 0 (EVENT_WEIGHTS; pinned by
+    # test_event_weights_are_non_negative), so a pair's rating is > 0
+    # exactly when one of its events weighs > 0: these are the pairs
+    # rec_bias_report's distinct over positively weighted events yields.
+    positive = inter_all.filter(F.col("rating") > 0).select("user_id", "item")
+    clock("gold_bias_reports", bias_report(positive, load(spark, sf_dir, "documents")))
     return timings
 
 

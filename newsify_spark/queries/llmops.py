@@ -448,7 +448,7 @@ def doc_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from newsify_spark.queries.vector import label_centroids
 
     emb = load(spark, sf_dir, "embeddings")
-    cents = label_centroids(spark, sf_dir).select(
+    cents = label_centroids(emb).select(
         F.col("label").alias("cluster_id"),
         F.transform("centroid", lambda v: F.round(v, 6)).alias("centroid"),
     )
@@ -1086,9 +1086,10 @@ def doc_pack_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "made engine-deterministic): pass 1 builds corpus unigram "
     "frequencies (one groupBy-token, partial-aggregated), pass 2 scores "
     "each doc by its mean token log-probability. The vocab->logprob side "
-    "is cached + broadcast (a few million rows even at 100 TB; the "
-    "corpus total derives from it, no third scan); the corpus is "
-    "scanned twice and shuffled once — the groupBy(doc_id) exchange "
+    "is broadcast (a few million rows even at 100 TB); the corpus total "
+    "derives from the same token counts, which it reads through a "
+    "ReusedExchange — no cache, no third scan. The corpus is scanned "
+    "twice and shuffled once — the groupBy(doc_id) exchange "
     "moves only partially-aggregated (doc_id, sum, count) rows.",
     tags=("text", "quality"),
     oracle=f"""
@@ -1108,7 +1109,7 @@ GROUP BY t.doc_id
 def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(TX.tokens("text")).alias("tok"))
-    counts = toks.groupBy("tok").agg(F.count("*").alias("c")).cache()
+    counts = toks.groupBy("tok").agg(F.count("*").alias("c"))
     tot = counts.agg(F.sum("c").cast("double").alias("n"))
     vocab = counts.crossJoin(F.broadcast(tot)).select(
         "tok", F.log(F.col("c") / F.col("n")).alias("logp")

@@ -143,7 +143,7 @@ def ml_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ml_greedy_story_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    cents = label_centroids(spark, sf_dir).select(
+    cents = label_centroids(emb).select(
         F.col("label").alias("centroid_id"), F.col("centroid").alias("centroid_vec")
     )
     pts = emb.select(F.col("vec_id").alias("point_id"), F.col("embedding").alias("point_vec"))
@@ -252,7 +252,7 @@ FROM inter i JOIN csz c ON i.cluster = c.cluster JOIN ssz s ON i.story = s.story
 )
 def ml_cluster_match_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    cents = label_centroids(spark, sf_dir).select(
+    cents = label_centroids(emb).select(
         F.col("label").alias("centroid_id"), F.col("centroid").alias("centroid_vec")
     )
     pts = emb.select(F.col("vec_id").alias("point_id"), F.col("embedding").alias("point_vec"))
@@ -377,21 +377,24 @@ def rec_bias_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from newsify_spark.queries.relational import EVENT_WEIGHTS
 
     ev = load(spark, sf_dir, "events")
-    docs = load(spark, sf_dir, "documents")
-    # No spread_small_scan here (r12): unlike the cached hybrid pipeline,
-    # this tree is uncached, so the join's inferred isnotnull(item)
-    # predicate pushes the from_json BELOW the round-robin exchange — the
-    # parse ran single-threaded at the scan anyway AND re-ran above it.
-    # Dropping the spread removes the exchange (and its implicit
-    # sort-before-repartition) plus the duplicate parse; the distinct's
-    # own (user_id, item) exchange ships two longs, not props strings
-    # (guide §2.3/§2.4). On parallel production scans this is a no-op
-    # difference by construction.
+    # No spread_small_scan here (r12): this tree is not checkpointed, so
+    # the join's inferred isnotnull(item) predicate pushes the from_json
+    # BELOW a round-robin exchange — the parse ran single-threaded at the
+    # scan anyway AND re-ran above it. Without the spread there is no
+    # exchange and one parse; the distinct's own (user_id, item) exchange
+    # ships two longs, not props strings (guide §2.3/§2.4). run_pipeline
+    # skips this read: it hands bias_report its interaction checkpoint.
     inter = (
         ev.filter(event_score("event_type", EVENT_WEIGHTS) > 0)
         .select("user_id", F.from_json("props", "k bigint")["k"].alias("item"))
         .distinct()
     )
+    return bias_report(inter, load(spark, sf_dir, "documents"))
+
+
+def bias_report(inter: DataFrame, docs: DataFrame) -> DataFrame:
+    """Per-user bias report over ``inter``, the distinct (user_id, item)
+    pairs with positive interaction weight, and the ``documents`` table."""
     toks = tokens("text")
     pos = F.size(F.filter(toks, lambda t: t.isin("fast", "small", "value")))
     neg = F.size(F.filter(toks, lambda t: t.isin("big", "error", "slow")))

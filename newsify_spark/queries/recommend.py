@@ -18,11 +18,25 @@ plan with no driver-side loop:
   → cold-start popularity fallback unioned in
     (recommendation-trainer.py:253-256)
 
-Every step is a built-in Spark expression: the only shuffles are the
-rating groupBy, the profile groupBy, and the final window — each keyed by
-user (or label, which is tiny and broadcast). At 100 TB the events scan
-dominates; everything after the first groupBy is proportional to
-|users|·|labels|.
+Every step is a built-in Spark expression. The shuffles, counted in the
+executed plans at sf0.01 (8 in all, down from 10 when each
+consumer re-ran the label aggregate):
+
+- the events spread by user_id, which the (user, item) rating groupBy
+  reuses (in the interaction checkpoint);
+- the per-label aggregate and its 1-row range aggregate (in the label
+  scores checkpoint; the second read of the label aggregate is a
+  ReusedExchange);
+- the profile and cold-start aggregates, each keyed by user_id: under
+  AQE a local checkpoint does not keep its user_id partitioning, so
+  both re-shuffle the checkpoint. The per-user windows ride on the
+  profile exchange;
+- the centroid builder's (label, pos) and label exchanges (none when the
+  caller hands in checkpointed centroids, as run_pipeline does);
+- the single-partition rank of the k-row popularity top-k.
+
+At 100 TB the events scan dominates; everything after the first groupBy
+is proportional to |users|·|labels|.
 """
 
 from __future__ import annotations
@@ -47,10 +61,10 @@ COLD_MIN_RATING = 0.5
 def interactions(events: DataFrame) -> DataFrame:
     """(user_id, item, rating): weighted event scores summed per user-item
     (A11 + A8). item = props.k, the fixture's story key."""
-    return _interactions_with_ts(events).filter(F.col("rating") > 0).drop("last_ts")
+    return interactions_with_ts(events).filter(F.col("rating") > 0).drop("last_ts")
 
 
-def _interactions_with_ts(events: DataFrame) -> DataFrame:
+def interactions_with_ts(events: DataFrame) -> DataFrame:
     """(user_id, item, rating, last_ts): ONE events pass computes both the
     weighted rating sum and the latest event time per (user, item), so the
     flagship query's freshness signal never re-scans/re-parses events —
@@ -62,9 +76,10 @@ def _interactions_with_ts(events: DataFrame) -> DataFrame:
     # unsplittable row group (no-op on multi-file production inputs).
     # Spread BY user_id (r12, guide §2.4): hash partitioning skips the
     # round-robin's local sort, and HashPartitioning(user_id) satisfies
-    # ClusteredDistribution(user_id, item), so this groupBy — and every
-    # downstream user_id-keyed aggregate/window reading the checkpointed
-    # result — plans without a second exchange.
+    # ClusteredDistribution(user_id, item), so this groupBy plans without
+    # a second exchange. A local checkpoint of the result does not carry
+    # that partitioning under AQE (its plan reports UnknownPartitioning),
+    # so the user_id-keyed consumers of the checkpoint shuffle again.
     return (
         spread_small_scan(events, key="user_id")
         .withColumn("item", F.from_json("props", "k bigint")["k"])
@@ -105,25 +120,34 @@ def user_profiles(inter: DataFrame, emb: DataFrame) -> DataFrame:
 
 
 def hybrid_recommendations(spark: SparkSession, sf_dir: str, k: int = K) -> DataFrame:
-    events = load(spark, sf_dir, "events")
+    """The flagship over the fixture tables: builds the interaction
+    checkpoint and the label centroids from ``sf_dir`` and hands them to
+    :func:`hybrid_topk`. ``run_pipeline`` calls the core directly with the
+    hand-offs its earlier stages already built."""
     emb = load(spark, sf_dir, "embeddings")
-
     # ONE events pass feeds ratings, freshness and the user roster; the
     # post-groupBy interaction table is |users|x|items| — small relative
-    # to raw events at any scale — so materialize it once for its four
-    # consumers (profiles, popularity, freshness, cold-start totals) as
-    # an eager local checkpoint: it never enters the CacheManager, so no
-    # cached plan outlives the call. On pyspark 4.1.2 this is also the
-    # faster hand-off (4 shared cores): a cold call at sf0.1 takes a
-    # median 3.9-4.5 s against 4.3-5.8 s with .cache(), and the pipeline's
-    # recommend stage runs 26 Spark jobs instead of 44.
-    inter_all = _interactions_with_ts(events).localCheckpoint(eager=True)
+    # to raw events at any scale — so materialize it once for its
+    # consumers as an eager local checkpoint: it never enters the
+    # CacheManager, so no cached plan outlives the call.
+    inter_all = interactions_with_ts(load(spark, sf_dir, "events")).localCheckpoint(
+        eager=True
+    )
+    return hybrid_topk(inter_all, emb, label_centroids(emb), k)
+
+
+def hybrid_topk(
+    inter_all: DataFrame, emb: DataFrame, cents: DataFrame, k: int = K
+) -> DataFrame:
+    """(user_id, story, rnk, score, src) from the interaction checkpoint
+    ``inter_all`` (:func:`interactions_with_ts`), the item embeddings
+    ``emb`` (vec_id, embedding, label) and the label centroids ``cents``
+    (label, centroid)."""
     inter = inter_all.filter(F.col("rating") > 0).drop("last_ts")
     # the item->label map is one row per item: always broadcastable
     item_lab = F.broadcast(emb.select(F.col("vec_id").alias("item"), "label"))
 
     profiles = user_profiles(inter, emb)
-    cents = label_centroids(spark, sf_dir)
 
     # content score: cosine(profile, centroid) for every (user, label);
     # centroids are tiny (one row per story cluster) -> broadcast, the
@@ -143,16 +167,10 @@ def hybrid_recommendations(spark: SparkSession, sf_dir: str, k: int = K) -> Data
     crange = F.max("cscore").over(wu) - F.min("cscore").over(wu)
     content = content.withColumn("cnorm", safe_div(F.col("cscore"), crange))
 
-    # label popularity over all interactions (A1) AND label freshness
-    # (F7/F8) in ONE label-keyed aggregation over the checkpointed one-pass
-    # events rollup (r12: previously two separate join+groupBy trees over
-    # inter/inter_all — guide §2.4, share one exchange). pop sums only
-    # positive ratings (sum ignores the when()'s nulls — the identical
-    # addend set the old rating>0 pre-filter produced); labels whose
-    # events are ALL non-positive get a null sum and are filtered out,
-    # exactly the rows the old inner pipeline never emitted. Range
-    # normalization (A7) via a 1-row agg + broadcast cross join — NOT a
-    # global window (which would single-partition the data).
+    # label popularity (A1) and label freshness (F7/F8) in ONE label-keyed
+    # aggregation over the interaction checkpoint. pop sums only positive
+    # ratings (sum ignores the when()'s nulls); labels whose events are
+    # ALL non-positive get a null pop and drop out of the scored labels.
     lab_stats = (
         inter_all.join(item_lab, "item")
         .groupBy("label")
@@ -161,36 +179,34 @@ def hybrid_recommendations(spark: SparkSession, sf_dir: str, k: int = K) -> Data
             F.max("last_ts").alias("label_ts"),
         )
     )
-    pop = lab_stats.filter(F.col("pop").isNotNull()).select("label", "pop")
-    prange = pop.agg((F.max("pop") - F.min("pop")).alias("prange"))
-    pop = pop.crossJoin(F.broadcast(prange)).withColumn(
-        "pnorm", safe_div(F.col("pop"), F.col("prange"))
+    # the popularity range (A7) and the latest event in one 1-row
+    # aggregate, broadcast — NOT a global window (which would
+    # single-partition the data). max/min skip the null pops, so prange
+    # spans the scored labels only, while mx spans every label.
+    glob = lab_stats.agg(
+        (F.max("pop") - F.min("pop")).alias("prange"), F.max("label_ts").alias("mx")
     )
-
-    # freshness: exponential decay on hours since the label's latest
-    # event (recommendation-trainer.py:77-80)
-    lab_ts = lab_stats.select("label", "label_ts")
-    glob = lab_ts.agg(F.max("label_ts").alias("mx"))
-    fresh = lab_ts.crossJoin(F.broadcast(glob)).select(
-        "label",
-        F.exp(
-            F.lit(-DECAY_PER_HOUR)
-            * (epoch_us("mx") - epoch_us("label_ts"))
-            / 3600.0e6
-        ).alias("fresh"),
+    # lab_scores has |labels| rows (bounded by the label vocabulary at any
+    # scale) and two consumers, the per-user scoring join and the
+    # cold-start popularity top-k: materialize it once, so the label
+    # aggregate runs once instead of once per consumer. Freshness is an
+    # exponential decay on hours since the label's latest event
+    # (recommendation-trainer.py:77-80).
+    lab_scores = (
+        lab_stats.filter(F.col("pop").isNotNull())
+        .crossJoin(F.broadcast(glob))
+        .select(
+            "label",
+            safe_div(F.col("pop"), F.col("prange")).alias("pnorm"),
+            F.exp(
+                F.lit(-DECAY_PER_HOUR)
+                * (epoch_us("mx") - epoch_us("label_ts"))
+                / 3600.0e6
+            ).alias("fresh"),
+        )
+        .localCheckpoint(eager=True)
     )
-
-    # pop and fresh are both per-label aggregates (|labels| rows, bounded
-    # by the label vocabulary at any scale) — without the hint Spark
-    # can't size the post-agg sides and falls back to sort-merge.
-    # lab_scores is built ONCE and feeds both the per-user scoring join
-    # and the cold-start popularity top-k (r12: the old code recombined
-    # pop⋈fresh a second time for pop_top)
-    lab_scores = pop.join(F.broadcast(fresh), "label").select(
-        "label", "pnorm", "fresh"
-    )
-    label_side = F.broadcast(lab_scores)
-    scored = content.join(label_side, "label").select(
+    scored = content.join(F.broadcast(lab_scores), "label").select(
         "user_id",
         "label",
         (
@@ -208,11 +224,14 @@ def hybrid_recommendations(spark: SparkSession, sf_dir: str, k: int = K) -> Data
     ).withColumn("src", F.lit("hybrid"))
 
     # cold-start fallback: users with too little positive signal get the
-    # global popularity top-k (recommendation-trainer.py:253-256)
-    totals = inter.groupBy("user_id").agg(F.sum("rating").alias("tot"))
-    all_users = inter_all.select("user_id").distinct()
-    cold = all_users.join(
-        totals.filter(F.col("tot") >= COLD_MIN_RATING), "user_id", "left_anti"
+    # global popularity top-k (recommendation-trainer.py:253-256). One
+    # per-user aggregate over every interaction: a user whose positive
+    # ratings sum below COLD_MIN_RATING, or who has none (null sum), is cold.
+    cold = (
+        inter_all.groupBy("user_id")
+        .agg(F.sum(F.when(F.col("rating") > 0, F.col("rating"))).alias("tot"))
+        .filter(~F.coalesce(F.col("tot") >= COLD_MIN_RATING, F.lit(False)))
+        .select("user_id")
     )
     pop_top = global_top_k(
         lab_scores.select(

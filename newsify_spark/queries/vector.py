@@ -28,15 +28,17 @@ from newsify_spark.queries.sqlkit import (
 from newsify_spark.tables import load
 
 
-def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(label, centroid array<double>) — element-wise mean per label (A2;
-    reference np.mean(embeddings, axis=0), batch-cluster-service.py:128-130).
+def label_centroids(emb: DataFrame) -> DataFrame:
+    """(label, centroid array<double>) — element-wise mean of ``emb``'s
+    ``embedding`` per ``label`` (A2; reference np.mean(embeddings, axis=0),
+    batch-cluster-service.py:128-130). The one centroid builder: the
+    registry queries, the flagship and the pipeline's story seeding all
+    call it.
 
     posexplode → (label,pos) partial-agg mean → re-assemble ordered array.
     One shuffle keyed (label,pos); at 100 TB this is the scalable form of
     a vector mean (no driver collection, no UDF).
     """
-    emb = load(spark, sf_dir, "embeddings")
     flat = emb.select("label", F.posexplode("embedding").alias("pos", "v"))
     means = flat.groupBy("label", "pos").agg(F.avg("v").alias("m"))
     return (
@@ -237,7 +239,7 @@ FROM best WHERE rn = 1
 )
 def vec_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    cents = label_centroids(spark, sf_dir).select(
+    cents = label_centroids(emb).select(
         F.col("label").alias("centroid_id"), F.col("centroid").alias("centroid_vec")
     )
     pts = emb.select(F.col("vec_id").alias("point_id"), F.col("embedding").alias("point_vec"))
@@ -352,7 +354,7 @@ def vec_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from newsify_spark.operators.similarity import knn_join_ivf
 
     emb = load(spark, sf_dir, "embeddings")
-    cells = label_centroids(spark, sf_dir).select(
+    cells = label_centroids(emb).select(
         F.col("label").cast("int").alias("cell"),
         F.transform("centroid", lambda v: F.round(v, 6)).alias("cell_vec"),
     )
@@ -707,7 +709,7 @@ def vec_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     DS, M, K, NPROBE, NCAND, TOPK = 16, 4, 16, 3, 20, 5
     emb = load(spark, sf_dir, "embeddings")
-    cells = label_centroids(spark, sf_dir).select(
+    cells = label_centroids(emb).select(
         F.col("label").cast("int").alias("cell"),
         F.transform("centroid", lambda v: F.round(v, 6)).alias("cell_vec"),
     )

@@ -111,9 +111,14 @@ def test_greedy_assignment_on_fixture_is_identity_like(spark):
 
 
 def test_cold_start_fallback_synthetic(spark, tmp_path):
-    """Users with no positive-weight events get the popularity top-k
-    (recommendation-trainer.py:253-256). The fixture has no cold users,
-    so synthesize one."""
+    """Users whose positive ratings sum below COLD_MIN_RATING get the
+    popularity top-k (recommendation-trainer.py:253-256). The fixture has
+    no cold users, so synthesize three:
+
+    - 99999: only zero-weight 'error' events (no positive rating at all);
+    - 99998: only 'view' events (0 < total < COLD_MIN_RATING);
+    - 99997: zero-weight events on some items and purchases on others
+      (a warm user, whose zero-rating rows must not make it cold)."""
     import shutil
 
     from newsify_spark.queries.recommend import hybrid_recommendations
@@ -122,27 +127,41 @@ def test_cold_start_fallback_synthetic(spark, tmp_path):
     sf.mkdir()
     for t in ("events", "embeddings"):
         shutil.copy(f"{SF_DIR}/{t}.parquet", sf / f"{t}.parquet")
-    # cold user 99999: only zero-weight 'error' events
     from newsify_spark.tables import load
 
     ev = load(spark, SF_DIR, "events")
-    cold = ev.limit(3).select(
-        (F.col("event_id") + 10_000_000).alias("event_id"),
-        "ts",
-        F.lit(99999).alias("user_id"),
-        F.lit("error").alias("event_type"),
-        "value",
-        "props",
+
+    def synth(user, event_type, offset, n=3, skip=0):
+        rows = ev.orderBy("event_id").limit(skip + n).orderBy(F.col("event_id").desc()).limit(n)
+        return rows.select(
+            (F.col("event_id") + offset).alias("event_id"),
+            "ts",
+            F.lit(user).cast(ev.schema["user_id"].dataType).alias("user_id"),
+            F.lit(event_type).alias("event_type"),
+            "value",
+            "props",
+        )
+
+    extra = (
+        synth(99999, "error", 10_000_000)
+        .unionByName(synth(99998, "view", 20_000_000))
+        .unionByName(synth(99997, "error", 30_000_000))
+        .unionByName(synth(99997, "purchase", 40_000_000, skip=3))
     )
-    ev.unionByName(cold).write.mode("overwrite").parquet(str(sf / "events.parquet"))
+    ev.unionByName(extra).write.mode("overwrite").parquet(str(sf / "events.parquet"))
 
     out = hybrid_recommendations(spark, str(sf)).toPandas()
-    cold_rows = out[out.user_id == 99999]
-    assert len(cold_rows) == 3
-    assert (cold_rows.src == "popular").all()
-    active = out[out.src == "hybrid"]
-    assert 99999 not in set(active.user_id)
-    assert (out.groupby("user_id").size() == 3).all()
+    by_src = out.groupby(["user_id", "src"]).size()
+    assert by_src[(99999, "popular")] == 3
+    assert (99999, "hybrid") not in by_src  # no positive rating, no profile
+    assert by_src[(99998, "popular")] == 3
+    # the view-only user also has a (weak) profile, so, as in the oracle,
+    # it keeps its hybrid list beside the fallback
+    assert by_src[(99998, "hybrid")] == 3
+    assert by_src[(99997, "hybrid")] == 3
+    assert (99997, "popular") not in by_src
+    synthetic = out.user_id.isin([99999, 99998, 99997])
+    assert (out[~synthetic].groupby("user_id").size() == 3).all()
 
 
 # ------------------------------------------------------------- merge ops
@@ -375,7 +394,7 @@ def test_centroid_assign_matmul_equals_expression(spark):
     from newsify_spark.tables import load
 
     emb = load(spark, SF_DIR, "embeddings")
-    cents = label_centroids(spark, SF_DIR).select(
+    cents = label_centroids(emb).select(
         F.col("label").alias("centroid_id"), F.col("centroid").alias("centroid_vec")
     )
     pts = emb.select(F.col("vec_id").alias("point_id"), F.col("embedding").alias("point_vec"))

@@ -98,8 +98,9 @@ def test_incremental_summarization(spark):
 
 def test_pipeline_caches_nothing(spark, tmp_path, monkeypatch):
     """The batch pipeline hands its stages off as eager local checkpoints:
-    a full run_pipeline plus the flagship and LSH / SemDeDup queries never
-    call persist or cache and leave the session CacheManager empty."""
+    a full run_pipeline plus the flagship, LSH / SemDeDup and unigram-LM
+    queries never call persist or cache and leave the session
+    CacheManager empty."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from newsify_spark.pipeline import run_pipeline
@@ -116,8 +117,70 @@ def test_pipeline_caches_nothing(spark, tmp_path, monkeypatch):
         monkeypatch.setattr(DataFrame, name, spy)
 
     run_pipeline(spark, SF_DIR, str(tmp_path / "gold"))
-    for name in ("rec_hybrid_topk", "doc_neardup_lsh", "ml_ann_lsh_topk", "doc_semdedup"):
+    for name in (
+        "rec_hybrid_topk",
+        "doc_neardup_lsh",
+        "ml_ann_lsh_topk",
+        "doc_semdedup",
+        "doc_unigram_logprob",
+    ):
         REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
     assert not calls, calls
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+# jobs of one warm run_pipeline at sf0.01 (test session, 8 cores, 8
+# shuffle partitions): 43 measured, 55 before the recommend and bias
+# stages read the interaction and centroid hand-offs
+WARM_PIPELINE_JOBS_MAX = 45
+
+
+def test_pipeline_is_one_dataflow(spark, tmp_path, monkeypatch):
+    """A warm run_pipeline loads events and embeddings once, builds the label
+    centroids once and stays within its job bound; its recommendation and
+    bias gold tables equal the standalone stages' (which rebuild the same
+    hand-offs from the fixture directory)."""
+    import sys
+
+    from newsify_spark import tables
+    from newsify_spark.pipeline import run_pipeline, stage_bias, stage_recommend
+    from newsify_spark.queries import vector
+
+    out = str(tmp_path / "gold")
+    run_pipeline(spark, SF_DIR, out)  # warm-up: first-run compiles and planning
+
+    loads, builds = [], []
+    spies = {
+        "load": (tables.load, lambda *a, _f=tables.load, **k: loads.append(a[2]) or _f(*a, **k)),
+        "label_centroids": (
+            vector.label_centroids,
+            lambda *a, _f=vector.label_centroids, **k: builds.append(1) or _f(*a, **k),
+        ),
+    }
+    for mod in [m for n, m in sys.modules.items() if n.startswith("newsify_spark")]:
+        for attr, (orig, spy) in spies.items():
+            if getattr(mod, attr, None) is orig:
+                monkeypatch.setattr(mod, attr, spy)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("warm_pipeline", "warm run_pipeline")
+    try:
+        run_pipeline(spark, SF_DIR, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("warm_pipeline"))
+
+    assert sorted(loads) == ["documents", "documents", "embeddings", "events"], loads
+    assert len(builds) == 1, builds
+    assert 0 < jobs <= WARM_PIPELINE_JOBS_MAX, jobs
+
+    def rows(df):
+        return sorted(map(repr, df.drop("last_updated").collect()))
+
+    gold = lambda name: spark.read.parquet(f"{out}/{name}")  # noqa: E731
+    recs = rows(gold("gold_recommendations"))
+    assert recs and recs == rows(stage_recommend(spark, SF_DIR))
+    bias = rows(gold("gold_bias_reports"))
+    assert bias and bias == rows(stage_bias(spark, SF_DIR))

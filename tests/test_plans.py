@@ -67,7 +67,7 @@ def test_revenue_preaggregates_before_dim_joins(spark):
 def test_interactions_spread_is_keyed(spark):
     """r12: the small-fixture events spread hashes on user_id (no
     round-robin sort; the (user,item) groupBy reuses the exchange)."""
-    from newsify_spark.queries.recommend import _interactions_with_ts
+    from newsify_spark.queries.recommend import interactions_with_ts
     from newsify_spark.tables import load
 
     # this asserts the UNCACHED plan shape: if an earlier test left this
@@ -75,7 +75,7 @@ def test_interactions_spread_is_keyed(spark):
     # InMemoryRelation whose stored AQE plan prints its one exchange
     # twice (Initial + Final sections), breaking the string count
     spark.catalog.clearCache()
-    df = _interactions_with_ts(load(spark, SF_DIR, "events"))
+    df = interactions_with_ts(load(spark, SF_DIR, "events"))
     plan = _plan(df)
     assert "RoundRobinPartitioning" not in plan, plan
     # exactly one exchange: the keyed spread satisfies the groupBy's
@@ -139,6 +139,51 @@ def test_exchange_reuse_in_flagship(spark):
     scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
     assert scans and not any("props" in cols for cols in scans), scans
     assert not any("events" in f for f in df.inputFiles()), df.inputFiles()
+
+
+def test_flagship_aggregates_label_stats_once(spark, monkeypatch):
+    """The per-label popularity / freshness aggregate runs once per
+    flagship call: its partial aggregate appears once across the final
+    plans of the call's checkpoints and of the query itself (the global
+    range aggregate reads it through a ReusedExchange), where its four
+    consumers each planned their own."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from newsify_spark.queries import REGISTRY
+
+    checkpointed = []
+    orig = DataFrame.localCheckpoint
+
+    def spy(self, *a, **k):
+        out = orig(self, *a, **k)
+        checkpointed.append(self)
+        return out
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    df = REGISTRY["rec_hybrid_topk"].fn(spark, SF_DIR)
+    df.collect()  # finalizes df's own adaptive plan (a write would plan anew)
+    final = []
+    for d in checkpointed + [df]:
+        plan = _plan(d)
+        assert "isFinalPlan=true" in plan, plan[:300]
+        final.append(plan.split("== Initial Plan ==")[0])
+    # the centroid builder's HashAggregate(keys=[label, pos]) and
+    # ObjectHashAggregate(keys=[label]) do not match
+    label_aggs = re.findall(
+        r"(?<!Object)HashAggregate\(keys=\[label#\d+\], functions=\[partial_",
+        "\n".join(final),
+    )
+    assert len(label_aggs) == 1, final
+
+
+def test_event_weights_are_non_negative():
+    """run_pipeline feeds the bias report the interaction pairs with
+    rating > 0 in place of rec_bias_report's distinct pairs over events
+    of weight > 0. The two sets are equal only while no event weight is
+    negative."""
+    from newsify_spark.queries.relational import EVENT_WEIGHTS
+
+    assert EVENT_WEIGHTS and all(w >= 0 for w in EVENT_WEIGHTS.values())
 
 
 def test_flagship_is_fully_jvm_side(spark):
@@ -335,7 +380,7 @@ def test_semantic_dedup_pair_join_is_equi(spark):
     from newsify_spark.tables import load
 
     emb = load(spark, SF_DIR, "embeddings")
-    cents = label_centroids(spark, SF_DIR).select(
+    cents = label_centroids(emb).select(
         F.col("label").alias("cluster_id"), F.col("centroid")
     )
     out = semantic_dedup(emb, cents, threshold=0.4, max_cluster=None)
