@@ -27,10 +27,12 @@ consumer re-ran the label aggregate):
 - the per-label aggregate and its 1-row range aggregate (in the label
   scores checkpoint; the second read of the label aggregate is a
   ReusedExchange);
-- the profile and cold-start aggregates, each keyed by user_id: under
-  AQE a local checkpoint does not keep its user_id partitioning, so
-  both re-shuffle the checkpoint. The per-user windows ride on the
-  profile exchange;
+- the profile aggregate and the roster (the per-user aggregate that
+  splits warm from cold users), each keyed by user_id: under AQE a
+  local checkpoint does not keep its user_id partitioning, so both
+  re-shuffle the checkpoint. The warm-user semi-join and the per-user
+  windows ride on the profile exchange; the cold read of the roster is a
+  ReusedExchange;
 - the centroid builder's (label, pos) and label exchanges (none when the
   caller hands in checkpointed centroids, as run_pipeline does);
 - the single-partition rank of the k-row popularity top-k.
@@ -147,7 +149,28 @@ def hybrid_topk(
     # the item->label map is one row per item: always broadcastable
     item_lab = F.broadcast(emb.select(F.col("vec_id").alias("item"), "label"))
 
-    profiles = user_profiles(inter, emb)
+    # the roster: one per-user aggregate over every interaction. A user
+    # whose positive ratings sum below COLD_MIN_RATING, or who has none
+    # (null sum), is cold and gets only the popularity fallback
+    # (recommendation-trainer.py:253-256); every other user gets only the
+    # hybrid list. An event without a user_id names no user. Dropping it
+    # here also keeps the roster's two reads one plan (a join would infer
+    # the filter into one read only), so they share one exchange; the
+    # shuffle join rides on the profile aggregate's user_id exchange
+    # instead of broadcasting the warm users.
+    roster = (
+        inter_all.filter(F.col("user_id").isNotNull())
+        .groupBy("user_id")
+        .agg(
+            F.coalesce(
+                F.sum(F.when(F.col("rating") > 0, F.col("rating"))) >= COLD_MIN_RATING,
+                F.lit(False),
+            ).alias("warm")
+        )
+    )
+    profiles = user_profiles(inter, emb).join(
+        roster.filter("warm").hint("shuffle_hash"), "user_id", "left_semi"
+    )
 
     # content score: cosine(profile, centroid) for every (user, label);
     # centroids are tiny (one row per story cluster) -> broadcast, the
@@ -223,16 +246,9 @@ def hybrid_topk(
         keep_rank=True,
     ).withColumn("src", F.lit("hybrid"))
 
-    # cold-start fallback: users with too little positive signal get the
-    # global popularity top-k (recommendation-trainer.py:253-256). One
-    # per-user aggregate over every interaction: a user whose positive
-    # ratings sum below COLD_MIN_RATING, or who has none (null sum), is cold.
-    cold = (
-        inter_all.groupBy("user_id")
-        .agg(F.sum(F.when(F.col("rating") > 0, F.col("rating"))).alias("tot"))
-        .filter(~F.coalesce(F.col("tot") >= COLD_MIN_RATING, F.lit(False)))
-        .select("user_id")
-    )
+    # cold-start fallback: the roster's cold users get the global
+    # popularity top-k
+    cold = roster.filter(~F.col("warm")).select("user_id")
     pop_top = global_top_k(
         lab_scores.select(
             "label", (F.col("pnorm") * F.col("fresh")).alias("score")
@@ -326,7 +342,8 @@ top AS (
 totals AS (SELECT user_id, sum(rating) AS tot FROM inter GROUP BY user_id),
 cold AS (
   SELECT DISTINCT e.user_id FROM events e
-  WHERE NOT EXISTS (SELECT 1 FROM totals t
+  WHERE e.user_id IS NOT NULL
+    AND NOT EXISTS (SELECT 1 FROM totals t
                     WHERE t.user_id = e.user_id AND t.tot >= {COLD_MIN_RATING})
 ),
 pop_top AS (
@@ -336,7 +353,8 @@ pop_top AS (
         FROM pnormed pn JOIN fresh fr ON pn.label = fr.label)
 )
 SELECT user_id, label AS story, rnk, round(score, 6) AS score, 'hybrid' AS src
-FROM top WHERE rnk <= {K}
+FROM top WHERE rnk <= {K} AND user_id IS NOT NULL
+  AND user_id NOT IN (SELECT user_id FROM cold)
 UNION ALL
 SELECT c.user_id, p.label AS story, p.rnk, round(p.score, 6) AS score, 'popular' AS src
 FROM cold c, pop_top p WHERE p.rnk <= {K}

@@ -10,7 +10,10 @@ Reference behaviors re-expressed:
   the stories state (SURVEY §7.5.3) — simpler and restart-safe vs
   applyInPandasWithState; intra-batch "new story then match next
   article" sequencing is approximated by a leader-election second pass
-  (see assign_batch_to_stories), all executor-side.
+  (see assign_batch_to_stories), all executor-side. Every batch, the
+  first included, runs one code path, and the state moves by one
+  story-keyed running-mean fold that serves minted and existing stories
+  alike.
 
 The batch body (``assign_batch_to_stories``) is a pure function so
 stream/batch parity is testable without Kafka: tests feed parquet slices
@@ -19,7 +22,7 @@ through the same body the streaming query uses.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,24 +49,27 @@ def watermark_dedup(
     return stream_df.dropDuplicates(key_cols)
 
 
+# pass-2 leader election routes through neardup_auto: all-pairs exact at
+# or below this many unmatched rows, RHP-LSH candidates + verify above
+PASS2_ALLPAIRS_MAX = 2000
+STORIES_SCHEMA = "story_id string, centroid array<double>, n_members bigint"
+
+
 @dataclass
 class StoryState:
     """Stories state carried across micro-batches: (story_id, centroid,
     n_members). In production this is a parquet/Delta table re-read per
-    batch; for tests it lives on the driver as a small DataFrame."""
+    batch; for tests it lives on the driver as a small DataFrame. ``None``
+    reads as the empty table."""
 
     stories: DataFrame | None = None
     next_id: int = 0
     threshold: float = 0.8
-    history: list = field(default_factory=list)
-    # pass-2 leader election routes through neardup_auto: all-pairs exact
-    # below this many unmatched rows, RHP-LSH candidates + verify above
-    pass2_allpairs_max: int = 2000
 
 
 def _mint_stories(unmatched: DataFrame, next_id: int) -> DataFrame:
     """Assign sequential story ids to unmatched articles ENTIRELY on
-    executors: row_number() in point_id order + the state's next ordinal
+    executors: row_number() in article_id order + the state's next ordinal
     (VERDICT round-1 What's-wrong #1 — the old form collected every
     unmatched row to the driver, a driver OOM on a cold 100 TB start).
 
@@ -72,10 +78,10 @@ def _mint_stories(unmatched: DataFrame, next_id: int) -> DataFrame:
     never the corpus; a sharded deployment would switch to per-partition
     count offsets if single-batch mints exceeded ~10^7.
     """
-    w = Window.orderBy("point_id")
+    w = Window.orderBy("article_id")
     return unmatched.select(
-        F.col("point_id").alias("seed_article"),
-        F.col("point_vec").alias("centroid"),
+        "article_id",
+        F.col("embedding").alias("centroid"),
         F.concat(
             F.lit("story_"), (F.row_number().over(w) + F.lit(next_id) - 1)
         ).alias("story_id"),
@@ -86,6 +92,9 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
     """One micro-batch of (article_id, embedding) rows → (article_id,
     story_id, similarity, is_new) assignments; updates ``state``.
 
+    One path for every batch, the first included: a missing state is the
+    empty stories table, against which pass 1 plans to an empty relation.
+
     Pass 1: articles join their nearest existing story if cosine > τ
     (reference duplication_service.py:74-92). Pass 2, within the batch:
     unmatched articles with no earlier-in-batch unmatched neighbor above
@@ -95,25 +104,36 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
     later articles, approximating the reference's per-message sequencing
     in two bounded passes. Articles whose only in-batch matches were
     non-leader followers mint too (the one divergence from the
-    sequential loop; streaming.stateful reproduces it exactly).
+    sequential loop; streaming.stateful reproduces it exactly). The
+    assignments are one union: pass-1 matches, minted seeds, followers.
 
-    Centroid update: running mean via (centroid*n + sum(x))/(n+k) — the
+    State update: one fold, keyed by story, over the prior stories, the
+    freshly minted seeds (n = 1) and the batch's members (pass-1 matches
+    and followers). A story with k > 0 members takes the running mean
+    (c·n + Σx)/(n + k), n' = n + k; one without keeps its centroid. The
     reference recomputes story centroids as plain means in batch
     refinement (batch-cluster-service.py:128-130); we fold incrementally.
     All steps are joins/aggregations — nothing is collected to the driver.
 
-    Intermediates, the returned assignments and the new ``state.stories``
-    are local checkpoints (``localCheckpoint``, eager or written by the
-    batch's own ``count()``): executor-local blocks outside the
-    CacheManager, freed by the ContextCleaner once unreachable. The trade
-    is lineage: a lost executor block fails the batch instead of
-    recomputing it. Under foreachBatch that is covered by
-    the same idempotent replay contract as ``streaming.ingest``: ``state``
-    changes only after every checkpoint of the batch succeeded, so a
-    batch that fails in here leaves ``state`` as it found it and the
-    replayed batch id runs against the same state.
+    Six local checkpoints (``localCheckpoint``, eager or written by the
+    batch's own ``count()``): the pass-1 matches with their vectors, the
+    unmatched articles, the follower matches, the minted stories, the
+    returned assignments and the new ``state.stories``. They are
+    executor-local blocks outside the CacheManager, freed by the
+    ContextCleaner once unreachable. The trade is lineage: a lost
+    executor block fails the batch instead of recomputing it. Under
+    foreachBatch that is covered by the same idempotent replay contract
+    as ``streaming.ingest``: ``state`` changes only after every
+    checkpoint of the batch succeeded, so a batch that fails in here
+    leaves ``state`` as it found it and the replayed batch id runs
+    against the same state.
     """
-    pts = batch.select(F.col("article_id").alias("point_id"), F.col("embedding").alias("point_vec"))
+    stories = state.stories
+    if stories is None:
+        # limit(0) plans to an empty LocalRelation, which empties pass 1
+        # at planning time: its checkpoint runs no job
+        stories = batch.sparkSession.createDataFrame([], STORIES_SCHEMA).limit(0)
+    pts = batch.select("article_id", "embedding")
 
     # matched, unmatched, fmatch and minted each feed several branches
     # below, so each is materialized once as a local checkpoint:
@@ -122,24 +142,28 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
     # a long-running stream accumulates no cache entries. unmatched and
     # minted are written by the count() the batch needs anyway
     # (``eager=False`` + ``count()``), so they cost no job of their own.
-    have_state = state.stories is not None and not state.stories.isEmpty()
-    if have_state:
-        cents = state.stories.select(
-            F.col("story_id").alias("centroid_id"), F.col("centroid").alias("centroid_vec")
+    # matched carries its vectors, so the fold reads no batch lineage.
+    matched = (
+        nearest_centroid_assign(
+            pts,
+            stories,
+            state.threshold,
+            point_id="article_id",
+            centroid_id="story_id",
+            point_vec="embedding",
+            centroid_vec="centroid",
         )
-        # unmatched stays an anti-join on pts, not a filter of a
-        # vector-carrying assignment checkpoint: a checkpoint keeps its
-        # plan's size estimate, and the assignment's is the points x
-        # stories crossJoin product, which would ride into the carried
-        # state and compound every batch (its digit count x4 per batch,
-        # planning time exploding within ~10 batches)
-        assigned = nearest_centroid_assign(pts, cents, threshold=state.threshold)
-        matched = assigned.filter("matched").localCheckpoint(eager=True)
-        unmatched = pts.join(matched.select("point_id"), "point_id", "left_anti")
-    else:
-        matched = None
-        unmatched = pts
-    unmatched = unmatched.localCheckpoint(eager=False)
+        .filter("matched")
+        .join(pts, "article_id")
+        .localCheckpoint(eager=True)
+    )
+    # unmatched stays an anti-join on pts, not a filter of a
+    # vector-carrying assignment checkpoint: a checkpoint keeps its
+    # plan's size estimate, and the assignment's is the points x
+    # stories crossJoin product, which would ride into the carried
+    # state and compound every batch (its digit count x4 per batch,
+    # planning time exploding within ~10 batches)
+    unmatched = pts.join(matched, "article_id", "left_anti").localCheckpoint(eager=False)
     n_rows = unmatched.count()
 
     # ---- pass 2: in-batch leader election + re-assignment ----------------
@@ -148,27 +172,27 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
     # exact verify for big (cold-start) batches — never an O(|U|^2)
     # crossJoin at scale. Only the LSH route needs the dimension.
     dim = 0
-    if n_rows > state.pass2_allpairs_max:
-        dim = int(unmatched.select(F.size("point_vec").alias("d")).first()["d"])
+    if n_rows > PASS2_ALLPAIRS_MAX:
+        dim = int(unmatched.select(F.size("embedding")).first()[0])
     sims = (
         neardup_auto(
             unmatched,
-            id_col="point_id",
-            vec_col="point_vec",
+            id_col="article_id",
+            vec_col="embedding",
             threshold=state.threshold,
             dim=dim,
-            allpairs_rows_max=state.pass2_allpairs_max,
+            allpairs_rows_max=PASS2_ALLPAIRS_MAX,
             n_rows=n_rows,
         )
         .filter(F.col("sim") > state.threshold)  # reference compares strictly
         .select(F.col("id_b").alias("lid"), F.col("id_a").alias("eid"), "sim")
     )
     leaders = unmatched.join(
-        sims.select(F.col("lid").alias("point_id")).distinct(), "point_id", "left_anti"
+        sims.select(F.col("lid").alias("article_id")).distinct(), "article_id", "left_anti"
     )
     # followers: best EARLIER LEADER above τ (ties: sim desc, eid asc)
     lead_sims = sims.join(
-        leaders.select(F.col("point_id").alias("eid")), "eid", "left_semi"
+        leaders.select(F.col("article_id").alias("eid")), "eid", "left_semi"
     )
     fmatch = top_k_per_group(
         lead_sims, ["lid"], [F.col("sim").desc(), F.col("eid").asc()], 1
@@ -176,108 +200,63 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
     fmatch = fmatch.localCheckpoint(eager=True)
     # minters = leaders + articles whose matches were all non-leaders
     minters = unmatched.join(
-        fmatch.select(F.col("lid").alias("point_id")), "point_id", "left_anti"
+        fmatch.select(F.col("lid").alias("article_id")), "article_id", "left_anti"
     )
     minted = _mint_stories(minters, state.next_id).localCheckpoint(eager=False)
     n_minted = minted.count()  # writes the checkpoint; no row collect
+    followers = fmatch.join(
+        minted.select(F.col("article_id").alias("eid"), "story_id"), "eid"
+    ).select(F.col("lid").alias("article_id"), "story_id", F.col("sim").alias("similarity"))
 
-    out_new = minted.select(
-        F.col("seed_article").alias("article_id"),
-        "story_id",
-        F.lit(1.0).alias("similarity"),
-        F.lit(True).alias("is_new"),
-    )
-    out_follow = fmatch.join(
-        minted.select(F.col("seed_article").alias("eid"), "story_id"), "eid"
-    ).select(
-        F.col("lid").alias("article_id"),
-        "story_id",
-        F.col("sim").alias("similarity"),
-        F.lit(False).alias("is_new"),
-    )
-    out = out_new.unionByName(out_follow)
-
-    # minted-story centroids fold their followers in: (seed + Σx)/(1 + k)
-    fvec = fmatch.join(
-        unmatched.select(F.col("point_id").alias("lid"), F.col("point_vec")), "lid"
-    ).join(minted.select(F.col("seed_article").alias("eid"), "story_id"), "eid")
-    fadd = (
-        fvec.select("story_id", F.posexplode("point_vec").alias("pos", "v"))
-        .groupBy("story_id", "pos")
-        .agg(F.sum("v").alias("add_v"), F.count("*").alias("k"))
-    )
-    minted_flat = minted.select("story_id", F.posexplode("centroid").alias("pos", "c"))
-    minted_final = (
-        minted_flat.join(fadd, ["story_id", "pos"], "left")
-        .select(
-            "story_id",
-            "pos",
-            (
-                (F.col("c") + F.coalesce(F.col("add_v"), F.lit(0.0)))
-                / (F.lit(1) + F.coalesce(F.col("k"), F.lit(0)))
-            ).alias("c"),
-            F.coalesce(F.col("k"), F.lit(0)).alias("k"),
+    out = (
+        matched.select("article_id", "story_id", "similarity", F.lit(False).alias("is_new"))
+        .unionByName(
+            minted.select(
+                "article_id", "story_id", F.lit(1.0).alias("similarity"), F.lit(True).alias("is_new")
+            )
         )
+        .unionByName(
+            followers.select("article_id", "story_id", "similarity", F.lit(False).alias("is_new"))
+        )
+    )
+
+    # the fold: one story-keyed aggregate over the prior stories, the
+    # minted seeds (n = 1) and the members' vectors (the followers' read
+    # from the unmatched checkpoint)
+    prior = stories.unionByName(
+        minted.select("story_id", "centroid", F.lit(1).alias("n_members"))
+    )
+    members = matched.select("story_id", "embedding").unionByName(
+        followers.join(unmatched, "article_id").select("story_id", "embedding")
+    )
+    g = (
+        prior.unionByName(members, allowMissingColumns=True)
         .groupBy("story_id")
         .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-            ).alias("centroid"),
-            (F.lit(1) + F.max("k")).alias("n_members"),
+            F.first("centroid", ignorenulls=True).alias("c"),
+            F.first("n_members", ignorenulls=True).alias("n"),
+            F.collect_list("embedding").alias("xs"),
         )
     )
-
-    if not have_state:
-        # localCheckpoint materializes the state AND truncates its lineage
-        # — without it the state plan nests one level per micro-batch and
-        # the driver eventually OOMs just printing it. Production form:
-        # write the stories state to a table per batch and re-read.
-        result = out.localCheckpoint(eager=True)
-        state.stories = minted_final.localCheckpoint(eager=True)
-        state.next_id += n_minted
-        return result
-
-    out_matched = matched.select(
-        F.col("point_id").alias("article_id"),
-        F.col("centroid_id").alias("story_id"),
-        "similarity",
-        F.lit(False).alias("is_new"),
+    n, k = F.col("n"), F.size("xs")
+    sum_x = F.aggregate(
+        "xs",
+        F.array_repeat(F.lit(0.0), F.size("c")),
+        lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
     )
-
-    # fold pass-1 matches into existing centroids: (c*n + Σx) / (n + k)
-    upd = (
-        matched.join(pts, "point_id")
-        .select(F.col("centroid_id").alias("story_id"), F.posexplode("point_vec").alias("pos", "v"))
-        .groupBy("story_id", "pos")
-        .agg(F.sum("v").alias("add_v"), F.count("*").alias("k"))
-    )
-    old_flat = state.stories.select(
-        "story_id", "n_members", F.posexplode("centroid").alias("pos", "c")
-    )
-    new_flat = old_flat.join(upd, ["story_id", "pos"], "left").select(
+    folded = g.select(
         "story_id",
-        "pos",
-        F.when(
-            F.col("add_v").isNotNull(),
-            (F.col("c") * F.col("n_members") + F.col("add_v"))
-            / (F.col("n_members") + F.col("k")),
-        )
+        F.when(k > 0, F.zip_with("c", sum_x, lambda c, sx: (c * n + sx) / (n + k)))
         .otherwise(F.col("c"))
-        .alias("c"),
-        F.coalesce(F.col("k"), F.lit(0)).alias("k"),
+        .alias("centroid"),
+        (n + k).alias("n_members"),
     )
-    updated = new_flat.groupBy("story_id").agg(
-        F.transform(F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]).alias("centroid"),
-        F.max("k").alias("added"),
-    )
-    refreshed = (
-        state.stories.select("story_id", "n_members")
-        .join(updated, "story_id")
-        .select("story_id", "centroid", (F.col("n_members") + F.col("added")).alias("n_members"))
-    )
-    # see the cold-start branch: checkpoint truncates per-batch lineage
-    result = out_matched.unionByName(out).localCheckpoint(eager=True)
-    state.stories = refreshed.unionByName(minted_final).localCheckpoint(eager=True)
+    # localCheckpoint materializes the state AND truncates its lineage —
+    # without it the state plan nests one level per micro-batch and the
+    # driver eventually OOMs just printing it. Production form: write the
+    # stories state to a table per batch and re-read.
+    result = out.localCheckpoint(eager=True)
+    state.stories = folded.localCheckpoint(eager=True)
     state.next_id += n_minted
     return result
 

@@ -9,7 +9,9 @@ stolen by a noisy neighbour delays the wall clock but does not add CPU
 cycles to our processes. This measures, per noop-sink pass, the delta
 of utime+stime summed over /proc for this process and every live
 descendant — the local-mode executor threads all live in the one JVM,
-so the subtree captures the whole computation.
+so the subtree captures the whole computation. The walk is
+``perfbench.measure.subtree_cpu_s``, the one perfbench reports ``cpu_s``
+with.
 
 Every pass is cold: after it, the cached plans and every persisted RDD
 are dropped, so no pass reads a cache left behind by an earlier one.
@@ -21,7 +23,6 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 
@@ -29,49 +30,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from newsify_spark.queries import REGISTRY
 from newsify_spark.session import get_spark
+from perfbench.measure import subtree_cpu_s
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
-CLK = os.sysconf("SC_CLK_TCK")
-
-
-def _children(pid: int, ppids: dict[int, int]) -> set[int]:
-    out = {pid}
-    added = True
-    while added:
-        added = False
-        for p, pp in ppids.items():
-            if pp in out and p not in out:
-                out.add(p)
-                added = True
-    return out
-
-
-def subtree_cpu_seconds() -> float:
-    """utime+stime (incl. reaped children via cutime/cstime) summed over
-    this process and all live descendants."""
-    me = os.getpid()
-    ppids: dict[int, int] = {}
-    stats: dict[int, tuple[int, ...]] = {}
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
-        try:
-            with open(f"/proc/{d}/stat", "rb") as f:
-                raw = f.read().decode("ascii", "replace")
-        except OSError:
-            continue
-        # fields after the (comm) parens; comm may contain spaces
-        rest = raw[raw.rindex(")") + 2 :].split()
-        pid = int(d)
-        ppids[pid] = int(rest[1])  # ppid is field 4 -> rest[1]
-        # utime=14,stime=15,cutime=16,cstime=17 -> rest[11..14]
-        stats[pid] = tuple(int(x) for x in rest[11:15])
-    total = 0
-    for pid in _children(me, ppids):
-        if pid in stats:
-            total += sum(stats[pid])
-    return total / CLK
 
 
 def force(df) -> None:
@@ -104,10 +66,10 @@ def main() -> None:
         for p in range(PASSES):
             group = f"cpu_{name}_p{p + 1}"
             spark.sparkContext.setJobGroup(group, f"cpu {name} pass{p + 1}")
-            c0, t0 = subtree_cpu_seconds(), time.perf_counter()
+            c0, t0 = subtree_cpu_s(), time.perf_counter()
             force(q.fn(spark, SF_DIR))
             wall.append(round(time.perf_counter() - t0, 3))
-            cpu.append(round(subtree_cpu_seconds() - c0, 3))
+            cpu.append(round(subtree_cpu_s() - c0, 3))
             drop_caches(spark)
             # deterministic structural counters — immune to host noise:
             # number of jobs/stages/tasks this pass actually ran

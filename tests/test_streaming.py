@@ -240,6 +240,93 @@ def test_cold_start_mints_10k_without_driver_collect(spark):
     assert nums == list(range(64))
 
 
+# jobs of the third (warm) assign_batch_to_stories call on the stream
+# below: 32 measured with the one story-state fold, 43 when the first
+# batch had its own branch and minted and existing stories had one
+# centroid fold each
+WARM_ASSIGN_JOBS_MAX = 35
+
+
+def _story_stream(spark):
+    """Three micro-batches of 8-dim articles around axis directions:
+    batch 0 opens stories on axes 0-2; batch 1 matches axes 1-2 and
+    mints axis 3; batch 2 matches axes 0 and 3 and mints axis 4. Every
+    direction appears two or three times per batch, so new stories also
+    gain in-batch followers. Returns (batches, {article_id: vector})."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    axes = [[0, 1, 2], [1, 2, 3], [0, 3, 4]]
+    batches, vecs = [], {}
+    for b, dirs in enumerate(axes):
+        rows = []
+        for j in range(8):
+            v = np.eye(8)[dirs[j % 3]] + 0.05 * rng.standard_normal(8)
+            aid = f"{b}_{j}"
+            vecs[aid] = v.astype(np.float32).astype(np.float64)
+            rows.append((aid, v.astype(np.float32).tolist()))
+        batches.append(spark.createDataFrame(rows, "article_id string, embedding array<float>"))
+    return batches, vecs
+
+
+def test_story_fold_is_the_mean_of_all_members(spark):
+    """Over a stream that both matches earlier stories and mints new ones
+    in every warm batch, each story's centroid is the mean of ALL its
+    members' embeddings across batches, and n_members is their count: one
+    running-mean fold serves minted and existing stories alike. The third
+    (warm) call stays within its job bound (one job group, status
+    tracker)."""
+    import numpy as np
+
+    from newsify_spark.streaming.pipeline import StoryState, assign_batch_to_stories
+
+    batches, vecs = _story_stream(spark)
+    state = StoryState(threshold=0.9)
+    sc = spark.sparkContext
+    outs = []
+    for i, b in enumerate(batches):
+        if i == 2:
+            sc.setJobGroup("warm_assign", "third micro-batch")
+        try:
+            out = assign_batch_to_stories(b, state)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        outs.append(out.toPandas())
+    jobs = len(sc.statusTracker().getJobIdsForGroup("warm_assign"))
+    assert 0 < jobs <= WARM_ASSIGN_JOBS_MAX, jobs
+
+    o = pd.concat(outs)
+    assert len(o) == 24 and o.article_id.is_unique
+    # the stream does what it says: warm batches match and mint
+    first = set(outs[0].story_id)
+    for later in outs[1:]:
+        assert (later.story_id.isin(first) & ~later.is_new).any()
+        assert later.is_new.any()
+    stories = state.stories.toPandas().set_index("story_id")
+    assert len(stories) == 5 == state.next_id
+    for sid, arts in o.groupby("story_id").article_id:
+        mean = np.mean([vecs[a] for a in arts], axis=0)
+        assert np.allclose(stories.loc[sid, "centroid"], mean, rtol=0, atol=1e-9), sid
+        assert stories.loc[sid, "n_members"] == len(arts)
+
+
+def test_empty_first_batch_then_assigns_every_article(spark):
+    """An empty first micro-batch leaves an empty (not missing) stories
+    state; the next batch still assigns every article and mints from 0."""
+    from newsify_spark.streaming.pipeline import StoryState, assign_batch_to_stories
+
+    batches, _ = _story_stream(spark)
+    empty = spark.createDataFrame([], "article_id string, embedding array<float>")
+    state = StoryState(threshold=0.9)
+    assert assign_batch_to_stories(empty, state).count() == 0
+    assert state.stories.count() == 0 and state.next_id == 0
+    o = assign_batch_to_stories(batches[0], state).toPandas()
+    assert sorted(o.article_id) == [f"0_{j}" for j in range(8)]
+    assert o.is_new.sum() == 3 == state.next_id
+    assert state.stories.toPandas().n_members.sum() == 8
+
+
 def test_kafka_source_wiring_reaches_kafka_lookup(spark):
     """format('kafka') wiring (S4/S5 production path): without the
     connector jar the DataSource lookup must fail ON THE KAFKA SOURCE
