@@ -2,7 +2,7 @@
 # end-of-round snapshot — it refuses (non-zero exit) on any driver-window
 # oracle mismatch, test failure, or unparseable bench line.
 
-.PHONY: gate test bench preflight
+.PHONY: gate test bench smoke preflight
 
 gate:
 	python scripts/green_gate.py
@@ -14,5 +14,10 @@ test:
 
 bench:
 	python bench.py
+
+# perfbench smoke test: every workload at the tiny size, untraced and
+# traced, checking the output line names every declared metric (~4 min)
+smoke:
+	python3 -m pytest perfbench/test_smoke.py -q
 
 preflight: gate test bench

@@ -8,7 +8,10 @@ with a COMPACT MERGEABLE BITMAP: a Bloom filter built from the corpus
 key set answers "definitely new" executor-side with zero I/O, and only
 the (rare) maybe-duplicates pay the exact verification join. CCNet /
 Dolma-style corpus pipelines use exactly this layout for rolling
-ingest at web scale.
+ingest at web scale. Its user here is ``queries/llmops.py::doc_bloom_dedup``
+(a persisted word store per corpus snapshot); the streaming ingest path
+does not use it, because its signature store already holds the key
+column that a bitmap's positives must be verified against.
 
 Everything is JVM-side expressions:
 
@@ -42,6 +45,8 @@ import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from newsify_spark.tables import read_batch_store
 
 
 def corpus_fingerprint(path: str) -> str:
@@ -132,28 +137,21 @@ def bloom_build(
 
 def save_bloom_partition(words: DataFrame, store_path: str, batch_id: int) -> None:
     """Persist one batch's (word, bits, m_bits) rows to
-    ``store_path/batch=<id>`` with mode("overwrite") — the same
-    idempotent batch-partition contract as the signature store
-    (streaming/ingest.py): a replayed batch rewrites its own partition."""
+    ``store_path/batch=<id>`` with mode("overwrite"): a rewrite of the
+    same batch id replaces its own partition instead of adding bits."""
     words.write.mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
 
 
-def load_bloom_store_df(
-    spark,
-    store_path: str,
-    exclude_batch: int | None = None,
-) -> tuple[DataFrame | None, int | None]:
+def load_bloom_store_df(spark, store_path: str) -> tuple[DataFrame | None, int | None]:
     """(merged_words_df, m_bits): the bit_or-merged (word, bits) table
     across all persisted batch partitions, LAZY — the corpus key set is
     never rescanned and the bitmap never passes through the driver.
-    Returns (None, None) on a missing/empty store. Raises if partitions
-    disagree on m_bits (bitmaps at different moduli do not merge)."""
-    try:
-        words = spark.read.option("basePath", store_path).parquet(store_path)
-    except Exception:  # path missing — no store yet
+    Returns (None, None) on a missing/empty store; a store that exists
+    but cannot be read raises. Raises if partitions disagree on m_bits
+    (bitmaps at different moduli do not merge)."""
+    words = read_batch_store(spark, store_path)
+    if words is None:
         return None, None
-    if exclude_batch is not None and "batch" in words.columns:
-        words = words.filter(F.col("batch") != exclude_batch)
     sizes = [r["m_bits"] for r in words.select("m_bits").distinct().limit(3).collect()]
     if not sizes:
         return None, None
@@ -163,15 +161,11 @@ def load_bloom_store_df(
     return merged, int(sizes[0])
 
 
-def load_bloom_store(
-    spark,
-    store_path: str,
-    exclude_batch: int | None = None,
-) -> tuple[list[int] | None, int | None]:
+def load_bloom_store(spark, store_path: str) -> tuple[list[int] | None, int | None]:
     """(bitmap, m_bits) — :func:`load_bloom_store_df` collected to a
     driver-side word list (<= m/64 rows). Use only for bitmaps small
     enough to ride the plan as a literal (see LITERAL_MAX_WORDS)."""
-    merged, m_bits = load_bloom_store_df(spark, store_path, exclude_batch)
+    merged, m_bits = load_bloom_store_df(spark, store_path)
     if merged is None:
         return None, None
     return _words_to_bitmap(merged.collect(), m_bits), m_bits

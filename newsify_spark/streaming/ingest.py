@@ -12,14 +12,14 @@ MinHash signature store (~1e-3 of corpus bytes, growing by one batch of
 rows per ingest).
 
 Per micro-batch:
-0. bloom exact-dup fast path (``operators.bloom``): a compact bitmap
-   over the store's text hashes drops exact re-deliveries before any
-   shingling — the common at-least-once case costs k hash probes/row.
-   The bitmap is PERSISTED beside the signature store as (word, bits)
-   parquet partitions (one per batch, same idempotent overwrite
-   contract) and loaded+bit_or-merged per trigger — m/64-bounded rows,
-   never a rescan of the corpus key set;
-1. ONE signature pass over the prefiltered batch
+0. exact re-deliveries first: the batch's ``text_hash`` (md5 of the
+   text) is anti-joined against the store's ``text_hash`` column, so the
+   common at-least-once case (a verbatim copy of an ingested doc) is
+   dropped before any shingling. The store already carries that column,
+   so the exact-dup layer keeps no state of its own — a membership
+   sketch over the same column would have to verify its positives
+   against it anyway;
+1. ONE signature pass over the remaining batch
    (``operators.dedup._signature_table``: doc columns, ``text_hash``,
    the distinct shingle array, h0..h15), checkpointed once; everything
    below reads that checkpoint and its one band table;
@@ -32,7 +32,7 @@ Per micro-batch:
    does not matter;
 3. append survivors to ``out_path/batch=<id>/``, and their signatures
    and text hashes (already in the survivors' checkpoint) to
-   ``store_path/batch=<id>/`` and the bloom word store.
+   ``store_path/batch=<id>/``.
 
 Idempotent restarts: foreachBatch can re-deliver a batch after a
 failure, so BOTH writes go to a batch-id subdirectory with
@@ -58,10 +58,7 @@ from newsify_spark.operators.dedup import (
     _signature_table,
     _store_dups,
 )
-
-# reserved bloom-store partition id for the one-time migration build
-# (real trigger batch ids are >= 0, so -1 never collides)
-MIGRATION_BATCH_ID = -1
+from newsify_spark.tables import read_batch_store
 
 
 def load_signature_store(
@@ -71,24 +68,26 @@ def load_signature_store(
     num_hashes: int = 16,
     exclude_batch: int | None = None,
 ) -> DataFrame:
-    """Signature store as a DataFrame; empty (with the right schema) if
-    nothing has been ingested yet. ``exclude_batch`` drops one batch
-    partition — a replayed batch must not see its own failed write.
-    Stores written by this module carry a ``text_hash`` column (the
-    exact-dup bloom fast path); stores from older layouts without it
-    still load."""
-    hcols = ", ".join(f"h{i} string" for i in range(num_hashes))
-    schema = f"{id_col} long, text_hash string, {hcols}"
-    try:
-        sigs = spark.read.option("basePath", store_path).parquet(store_path)
-    except Exception:  # AnalysisException: path missing / empty store
+    """Signature store as a DataFrame of (id, ``text_hash``, h0..h{K-1});
+    empty (with that schema) if nothing has been ingested yet.
+    ``exclude_batch`` drops one batch partition — a replayed batch must
+    not see its own failed write. A store from an older layout without
+    ``text_hash`` still loads, with a null ``text_hash``: its rows drop
+    exact re-deliveries through the signature estimate (1.0) instead.
+    A store that exists but cannot be read raises."""
+    hcols = [f"h{i}" for i in range(num_hashes)]
+    sigs = read_batch_store(spark, store_path)
+    if sigs is None:
+        schema = ", ".join([f"{id_col} long", "text_hash string"] + [f"{h} string" for h in hcols])
         return spark.createDataFrame([], schema)
     if exclude_batch is not None and "batch" in sigs.columns:
         sigs = sigs.filter(F.col("batch") != exclude_batch)
-    keep = [id_col] + (["text_hash"] if "text_hash" in sigs.columns else []) + [
-        f"h{i}" for i in range(num_hashes)
-    ]
-    return sigs.select(*keep)
+    text_hash = (
+        F.col("text_hash")
+        if "text_hash" in sigs.columns
+        else F.lit(None).cast("string").alias("text_hash")
+    )
+    return sigs.select(id_col, text_hash, *hcols)
 
 
 def ingest_batch(
@@ -103,8 +102,6 @@ def ingest_batch(
     band_size: int = 4,
     jaccard_threshold: float = 0.8,
     est_threshold: float = 0.5,
-    bloom_store_path: str | None = None,
-    bloom_capacity: int = 100_000,
     txn_bronze: bool = False,
 ) -> DataFrame:
     """Process ONE micro-batch (the foreachBatch body, exposed for batch
@@ -133,93 +130,33 @@ def ingest_batch(
     commit marker, and becomes a no-op — the bronze table holds each
     batch exactly once, and readers get snapshot isolation + time
     travel for free (VERDICT r7 #6, composing the r7
-    ``exactly_once_sink`` guarantee into the ingest pipeline).
-
-    ``bloom_store_path`` (default ``<store_path>_bloom``) holds the
-    persisted (word, bits) bitmap partitions; ``bloom_capacity`` sizes
-    the bitmap (dedup-horizon keys, 20 bits/key) when the FIRST batch
-    creates the store — m is fixed for the store's life, so a store
-    past capacity just degrades fpp (more verified false positives),
-    never correctness."""
-    from newsify_spark.operators.bloom import (
-        LITERAL_MAX_WORDS,
-        _next_pow2,
-        _words_to_bitmap,
-        bloom_build_words,
-        bloom_prefilter_dedup,
-        load_bloom_store_df,
-        save_bloom_partition,
-    )
-
+    ``exactly_once_sink`` guarantee into the ingest pipeline)."""
     spark = batch.sparkSession
-    if bloom_store_path is None:
-        bloom_store_path = f"{store_path.rstrip('/')}_bloom"
-    # 0. bloom exact-dup fast path: at-least-once delivery mostly
-    #    re-sends EXACT copies; a Bloom bitmap over the store's
-    #    text_hash column drops them before the (much costlier)
-    #    shingle/MinHash stages. Pure cost optimization — output is
-    #    unchanged (positives are verified exactly; an exact dup that
-    #    somehow slipped through would still hit estimate 1.0 in the
-    #    store-estimate stage below). The bitmap is loaded from the
-    #    persisted word store (m/64-bounded read, replays excluded),
-    #    NOT rebuilt from the corpus key set each trigger.
+    # the store excludes this batch's own partition, so a replay is
+    # deterministic
     pre_store = load_signature_store(
         spark, store_path, id_col, num_hashes, exclude_batch=batch_id
     )
-    words, m_store = load_bloom_store_df(
-        spark, bloom_store_path, exclude_batch=batch_id
-    )
-    if m_store is None:
-        m_store = max(1024, _next_pow2(20 * max(bloom_capacity, 1)))
-    if words is None and "text_hash" in pre_store.columns and not pre_store.isEmpty():
-        # migration: signature store predates the bloom store — build the
-        # word table from it ONCE at the store's canonical m, and PERSIST
-        # it under the reserved batch=-1 partition. Without the write,
-        # later batches (which skip this branch because the store now
-        # exists) would probe a bitmap missing every pre-migration key,
-        # breaking bloom_prefilter_dedup's "bitmap covers the corpus"
-        # contract (ADVICE r6). batch=-1 never collides with trigger ids
-        # and is excluded from exclude_batch filters only when asked.
-        words = bloom_build_words(pre_store.select("text_hash"), "text_hash", m_store)
-        save_bloom_partition(words, bloom_store_path, MIGRATION_BATCH_ID)
     cols = batch.columns
-    hashed = batch.withColumn("text_hash", F.md5(F.col(text_col)))
-    if words is not None:
-        # the batch source feeds both sides of the prefilter's
-        # definitely-new/maybe split — materialize it once so the source
-        # isn't evaluated per branch (ADVICE r5)
-        hashed = hashed.localCheckpoint(eager=True)
-        # small store: collect the m/64-bounded words into a plan-literal
-        # bitmap (zero-shuffle codegen probe); big store: the words table
-        # stays distributed and the relational probe joins it as data.
-        # Verification side either way: only bloom-POSITIVE rows reach the
-        # anti-join, probing the store's single hash column.
-        if m_store // 64 <= LITERAL_MAX_WORDS:
-            bitmap = _words_to_bitmap(words.collect(), m_store)
-            hashed = bloom_prefilter_dedup(
-                hashed, pre_store.select("text_hash"), "text_hash", bitmap=bitmap
-            )
-        else:
-            hashed = bloom_prefilter_dedup(
-                hashed,
-                pre_store.select("text_hash"),
-                "text_hash",
-                words=words.select("word", "bits"),
-                m_bits=m_store,
-            )
+    # 0. exact re-deliveries (the common at-least-once case) leave before
+    #    the shingle/MinHash pass: one anti-join on the store's text_hash
+    #    column. An exact dup it cannot see (a store row without a text
+    #    hash) still meets estimate 1.0 in the store-estimate stage.
+    fresh = batch.withColumn("text_hash", F.md5(F.col(text_col))).join(
+        pre_store.select("text_hash"), "text_hash", "left_anti"
+    )
     # 1. the batch's ONE signature pass, materialized: the band table, the
     #    Jaccard verify, the store estimate, the survivors and the store
     #    write all read this checkpoint
-    sig = _signature_table(hashed, text_col, num_hashes, shingle_n).localCheckpoint(eager=True)
+    sig = _signature_table(fresh, text_col, num_hashes, shingle_n).localCheckpoint(eager=True)
     bands = _sig_bands(sig, id_col, num_hashes, band_size)
     # 2. within-batch near-dups (min-id survivor) and store dups
-    #    (signature-only estimate; the store excludes this batch's own
-    #    partition so a replay is deterministic), dropped in one anti-join
+    #    (signature-only estimate), dropped in one anti-join
     drop = _near_dup_losers(sig, bands, id_col, jaccard_threshold).unionByName(
         _store_dups(sig, bands, pre_store, id_col, num_hashes, band_size, est_threshold)
     )
-    # materialized once: it feeds the corpus write, the signature-store
-    # write and the bloom words
+    # materialized once: it feeds the corpus write and the signature-store
+    # write
     survivors = sig.join(drop, id_col, "left_anti").localCheckpoint(eager=True)
     kept = survivors.select(*cols)
     if txn_bronze:
@@ -234,18 +171,11 @@ def ingest_batch(
         )
     else:
         kept.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
-    # 3. signatures + text_hash (the next batch's bloom fast path) to the
-    #    store, straight from the survivors' checkpoint
+    # 3. signatures + text_hash (the next batch's exact-dup anti-join) to
+    #    the store, straight from the survivors' checkpoint
     survivors.select(
         id_col, *[f"h{i}" for i in range(num_hashes)], "text_hash"
     ).write.mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
-    # the admitted hashes' bloom words join the persisted bitmap
-    # store (m/64-bounded rows; same idempotent batch partition)
-    save_bloom_partition(
-        bloom_build_words(survivors.select("text_hash"), "text_hash", m_store),
-        bloom_store_path,
-        batch_id,
-    )
     if txn_bronze:
         # the txnlog itself holds the written rows; the checkpointed
         # survivors are the same rows without a log read
@@ -257,27 +187,23 @@ def ingest_batch(
     return spark.read.schema(kept.schema).parquet(f"{out_path}/batch={batch_id}")
 
 
-def expire_store_batches(
-    store_path: str,
-    keep_last: int,
-    protected: tuple[int, ...] = (MIGRATION_BATCH_ID,),
-) -> list[int]:
+def expire_store_batches(store_path: str, keep_last: int) -> list[int]:
     """Retention for batch-partitioned stores (the signature store, the
-    bloom word store, the CM-sketch store — any ``<path>/batch=<id>``
-    layout): delete every batch partition older than the newest
-    ``keep_last``, returning the expired ids. This is the reference's
-    Redis TTL re-expressed for table stores (duplication_service.py
-    keys its dedup SET entries with an expiry): Redis silently forgets
-    old keys; here the operator forgets old batches on the operator's
-    schedule instead of per-key timers — one directory delete per
-    expired batch, no scan, no rewrite of surviving partitions.
+    CM-sketch store — any ``<path>/batch=<id>`` layout): delete every
+    batch partition older than the newest ``keep_last``, returning the
+    expired ids. This is the reference's Redis TTL re-expressed for
+    table stores (duplication_service.py keys its dedup SET entries with
+    an expiry): Redis silently forgets old keys; here the operator
+    forgets old batches on the operator's schedule instead of per-key
+    timers — one directory delete per expired batch, no scan, no rewrite
+    of surviving partitions.
 
     Documented semantic (identical to Redis-TTL dedup): a document
     whose ONLY signature lived in an expired batch can re-enter on
-    redelivery. That is the retention trade — bounded store size at
-    100 TB ingest — and callers choose ``keep_last`` to match their
-    redelivery horizon. ``protected`` partitions (the migration build
-    by default) are never expired."""
+    redelivery — its text hash went with the partition, so neither the
+    exact-dup anti-join nor the signature estimate sees it. That is the
+    retention trade — bounded store size at 100 TB ingest — and callers
+    choose ``keep_last`` to match their redelivery horizon."""
     import os
     import re
     import shutil
@@ -292,7 +218,7 @@ def expire_store_batches(
         m = re.fullmatch(r"batch=(-?\d+)", d)
         if m:
             ids.append(int(m.group(1)))
-    keep = set(protected) | set(sorted(set(ids) - set(protected))[-keep_last:] if keep_last else set())
+    keep = set(sorted(ids)[-keep_last:]) if keep_last else set()
     expired = sorted(i for i in ids if i not in keep)
     for i in expired:
         shutil.rmtree(f"{base}/batch={i}")

@@ -4,12 +4,15 @@ The driver materializes deterministic parquet tables under
 ``/root/testdata/sf{0.001,0.01,0.1}`` (TESTDATA.md). All queries take an
 ``sf_dir`` so the same code runs at any scale factor; at 100 TB the only
 change is the path (and partitioned layout — see ``write_partitioned``).
+Batch-partitioned stores (the signature and bloom word stores) read
+through ``read_batch_store``.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -75,6 +78,21 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture as a temp view so SQL-form queries can run."""
     for name in TABLES:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def read_batch_store(spark: SparkSession, store_path: str) -> DataFrame | None:
+    """A ``<path>/batch=<id>`` parquet store as one DataFrame with a
+    ``batch`` column, or None if it holds nothing yet: the directory is
+    missing, or every partition is ``_SUCCESS``-only (an empty batch). A
+    store that exists but does not read (a corrupt or foreign file)
+    raises: taking it for an empty store would switch its dedup off
+    without a sign."""
+    try:
+        return spark.read.option("basePath", store_path).parquet(store_path)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
 
 
 def write_partitioned(df: DataFrame, path: str, *, partition_by: list[str] | None = None, buckets: tuple[int, str] | None = None) -> None:

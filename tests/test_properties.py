@@ -105,8 +105,13 @@ def test_upsert_law(spark, old, new):
 @given(data=st.data())
 @settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_minhash_estimates_jaccard(spark, data):
-    """Jaccard(estimate from 16-hash MinHash) within 0.35 of exact —
-    loose statistical bound, tight enough to catch broken hashing."""
+    """Jaccard(estimate from 128-hash MinHash) within 0.25 of exact —
+    a statistical bound, tight enough to catch broken hashing. h0..h15
+    are the default 16-hash signature (same seeds), so it is covered
+    too. At 16 hashes no fixed bound holds for every input (the
+    estimate's sd is up to 0.125; 0.35 is missed by ~0.2% of these
+    pairs, and hypothesis replays a found miss on every later run);
+    at 128 the sd is at most 0.044, so 0.25 is a 5.6-sigma bound."""
     from newsify_spark.operators.dedup import jaccard_pairs, minhash_signatures_pandas
 
     vocab = [f"w{i}" for i in range(30)]
@@ -117,9 +122,10 @@ def test_minhash_estimates_jaccard(spark, data):
     docs = spark.createDataFrame([(0, texts[0]), (1, texts[1])], "doc_id long, text string")
     exact = jaccard_pairs(docs).collect()
     exact_j = exact[0]["jaccard"] if exact else 0.0
-    sigs = minhash_signatures_pandas(docs).toPandas().set_index("doc_id")
-    agree = sum(sigs.loc[0, f"h{i}"] == sigs.loc[1, f"h{i}"] for i in range(16)) / 16
-    assert abs(agree - exact_j) <= 0.35
+    k = 128
+    sigs = minhash_signatures_pandas(docs, num_hashes=k).toPandas().set_index("doc_id")
+    agree = sum(sigs.loc[0, f"h{i}"] == sigs.loc[1, f"h{i}"] for i in range(k)) / k
+    assert abs(agree - exact_j) <= 0.25
 
 
 @given(

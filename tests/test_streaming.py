@@ -597,22 +597,6 @@ def test_streaming_ingest_replay_is_idempotent(spark, tmp_path):
     assert [r.doc_id for r in replay.collect()] == [1]
     assert spark.read.parquet(out).count() == 1
     assert spark.read.parquet(store).groupBy("doc_id").count().filter("count > 1").count() == 0
-    # persisted-bitmap path is replay-idempotent too: the bloom word
-    # store holds exactly ONE batch partition (the replay overwrote its
-    # own), and the merged bitmap equals a fresh build over the store's
-    # hashes — replays never double-set or leak stale bits
-    from newsify_spark.operators.bloom import bloom_build_words, load_bloom_store_df
-
-    words, m_bits = load_bloom_store_df(spark, f"{store}_bloom")
-    assert m_bits is not None
-    bdirs = spark.read.option("basePath", f"{store}_bloom").parquet(f"{store}_bloom")
-    assert [r.batch for r in bdirs.select("batch").distinct().collect()] == [0]
-    fresh = bloom_build_words(
-        spark.read.parquet(store).select("text_hash"), "text_hash", m_bits
-    )
-    got = sorted((r.word, r.bits) for r in words.collect())
-    want = sorted((r.word, r.bits) for r in fresh.select("word", "bits").collect())
-    assert got == want
 
 
 def test_streaming_ingest_txn_bronze_replay_exactly_once(spark, tmp_path):
@@ -760,10 +744,11 @@ def test_dedup_ingest_stream_end_to_end(spark, tmp_path):
     assert survivors in ([1], [2]), survivors
 
 
-def test_streaming_ingest_bloom_fast_path_drops_exact_redelivery(spark, tmp_path):
-    """An exact re-delivery of an ingested doc is dropped by the bloom
-    fast path (store carries text_hash), and the final corpus equals
-    what the MinHash-only path would produce — bloom is cost-only."""
+def test_streaming_ingest_text_hash_anti_join_drops_exact_redelivery(spark, tmp_path):
+    """An exact re-delivery of an ingested doc is dropped by the text-hash
+    anti-join against the store (store carries text_hash), and the final
+    corpus equals what the MinHash-only path would produce — the anti-join
+    only moves the drop ahead of the signature pass."""
     from newsify_spark.streaming.ingest import ingest_batch, load_signature_store
 
     store, out = str(tmp_path / "store"), str(tmp_path / "out")
@@ -782,44 +767,52 @@ def test_streaming_ingest_bloom_fast_path_drops_exact_redelivery(spark, tmp_path
     assert sorted(r.doc_id for r in corpus.collect()) == [1, 2, 11]
 
 
-def test_ingest_bloom_migration_persists_store(spark, tmp_path):
-    """A signature store that predates the bloom store triggers the
-    one-time migration build — which must PERSIST under the reserved
-    batch=-1 partition (ADVICE r6): without the write, later batches
-    (which skip the migration branch because the store now exists) would
-    probe a bitmap missing every pre-migration key."""
+def test_ingest_store_without_text_hash_drops_exact_redelivery(spark, tmp_path):
+    """A signature store written before stores carried ``text_hash``
+    still loads (with a null text hash), and an exact re-delivery of one
+    of its docs is still dropped: the anti-join cannot see it, but its
+    signature estimate against the store is 1.0."""
     import shutil
 
-    from newsify_spark.operators.bloom import bloom_build_words, load_bloom_store_df
-    from newsify_spark.streaming.ingest import MIGRATION_BATCH_ID, ingest_batch
+    from newsify_spark.streaming.ingest import ingest_batch, load_signature_store
 
     store, out = str(tmp_path / "store"), str(tmp_path / "out")
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
     t1 = "some document text with enough words to shingle properly here"
     t2 = "an entirely different second document mentioning other things now"
     ingest_batch(mk([(1, t1), (2, t2)]), 0, store, out)
-    shutil.rmtree(f"{store}_bloom")  # simulate a pre-bloom-era store
+    # rewrite the store partition in the older layout: no text_hash column
+    old = str(tmp_path / "old")
+    spark.read.parquet(f"{store}/batch=0").drop("text_hash").write.parquet(old)
+    shutil.rmtree(f"{store}/batch=0")
+    shutil.move(old, f"{store}/batch=0")
 
-    s1 = ingest_batch(mk([(10, "a third totally novel text about engines")]), 1, store, out)
-    assert [r.doc_id for r in s1.collect()] == [10]
-    bloom = spark.read.option("basePath", f"{store}_bloom").parquet(f"{store}_bloom")
-    parts = sorted(r.batch for r in bloom.select("batch").distinct().collect())
-    assert parts == [MIGRATION_BATCH_ID, 1]
-    # the merged store covers the PRE-migration corpus: every bit of a
-    # fresh build over the historical hashes is set in the merged bitmap
-    words, m_bits = load_bloom_store_df(spark, f"{store}_bloom")
-    hist = bloom_build_words(
-        spark.read.parquet(store).filter("batch = 0").select("text_hash"),
-        "text_hash",
-        m_bits,
-    )
-    merged = {r.word: r.bits for r in words.collect()}
-    for r in hist.collect():
-        assert merged.get(r.word, 0) & r.bits == r.bits
+    sigs = load_signature_store(spark, store)
+    assert sorted((r.doc_id, r.text_hash) for r in sigs.collect()) == [(1, None), (2, None)]
+    s1 = ingest_batch(mk([(10, t1), (11, "a third totally novel text about engines")]), 1, store, out)
+    assert [r.doc_id for r in s1.collect()] == [11]
 
-    # exact redelivery of a PRE-migration doc is still dropped
-    s2 = ingest_batch(mk([(20, t1)]), 2, store, out)
-    assert [r.doc_id for r in s2.collect()] == []
+
+def test_ingest_batch_raises_on_corrupt_store(spark, tmp_path):
+    """A signature store that exists but does not read is an error, not an
+    empty store: taking it for empty would admit every document."""
+    import glob
+    import os
+
+    import pytest
+
+    from newsify_spark.streaming.ingest import ingest_batch
+
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
+    t1 = "some document text with enough words to shingle properly here"
+    ingest_batch(mk([(1, t1)]), 0, store, out)
+    for f in glob.glob(f"{store}/batch=0/*"):
+        os.remove(f)
+    with open(f"{store}/batch=0/part-00000.parquet", "w") as fh:
+        fh.write("not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        ingest_batch(mk([(10, t1)]), 1, store, out)
 
 
 def test_micro_batch_body_caches_nothing(spark, tmp_path, monkeypatch):
@@ -940,24 +933,50 @@ def test_warm_micro_batch_compiles_few_classes(spark, tmp_path):
     assert deltas[2] <= 40, deltas
 
 
+# jobs of the third (warm) ingest_batch on the _compile_stream_batch
+# stream: 26 measured with the text-hash anti-join as the exact-dup
+# layer, 38 when a persisted bloom word store fed a relational
+# prefilter (29 against 18 on perfbench stream batches)
+WARM_INGEST_JOBS_MAX = 30
+
+
+def test_warm_ingest_batch_has_no_bloom_layer(spark, tmp_path):
+    """The micro-batch's exact-dup layer is one anti-join on the store's
+    text_hash column: the third (warm) ingest_batch stays within its job
+    bound (one job group, status tracker), still drops the exact
+    re-delivery, and no bloom word store is written beside the
+    signature store."""
+    import os
+
+    from newsify_spark.streaming.ingest import ingest_batch
+
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    sc = spark.sparkContext
+    for batch_id in range(3):
+        docs = _compile_stream_batch(spark, batch_id)
+        if batch_id == 2:
+            sc.setJobGroup("warm_ingest", "third micro-batch")
+        try:
+            kept = ingest_batch(docs, batch_id, store, out)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        ids = {r.doc_id for r in kept.collect()}
+        # the exact re-delivery (x09) never survives
+        assert batch_id == 0 or 100 * batch_id + 9 not in ids, ids
+    jobs = len(sc.statusTracker().getJobIdsForGroup("warm_ingest"))
+    assert 0 < jobs <= WARM_INGEST_JOBS_MAX, jobs
+    assert not os.path.exists(f"{store}_bloom")
+
+
 def test_expire_store_batches_redis_ttl_semantics(spark, tmp_path):
     """Store retention (the reference's Redis-TTL dedup re-expressed):
     expiring old batch partitions bounds the store, survivors keep
     deduping, and a doc whose only signature lived in an expired batch
-    RE-ENTERS on redelivery — the documented TTL trade. The migration
-    partition (batch=-1) is protected by default."""
+    RE-ENTERS on redelivery — the documented TTL trade."""
     import os
 
-    from newsify_spark.operators.bloom import (
-        bloom_build_words,
-        load_bloom_store_df,
-        save_bloom_partition,
-    )
-    from newsify_spark.streaming.ingest import (
-        MIGRATION_BATCH_ID,
-        expire_store_batches,
-        ingest_batch,
-    )
+    from newsify_spark.streaming.ingest import expire_store_batches, ingest_batch
 
     store, out = str(tmp_path / "store"), str(tmp_path / "out")
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
@@ -965,18 +984,9 @@ def test_expire_store_batches_redis_ttl_semantics(spark, tmp_path):
     t1 = "a later document about parquet layouts with plenty of words too"
     ingest_batch(mk([(1, t0)]), 0, store, out)
     ingest_batch(mk([(2, t1)]), 1, store, out)
-    # add a protected migration partition to the bloom store (at the
-    # store's canonical m — partitions at mixed m do not merge)
-    _w, m_bits = load_bloom_store_df(spark, f"{store}_bloom")
-    hashes = spark.createDataFrame([("00",)], "text_hash string")
-    save_bloom_partition(
-        bloom_build_words(hashes, "text_hash", m_bits), f"{store}_bloom", MIGRATION_BATCH_ID
-    )
 
     assert expire_store_batches(store, keep_last=1) == [0]
-    assert expire_store_batches(f"{store}_bloom", keep_last=1) == [0]
     assert sorted(os.listdir(store)) == ["batch=1"]
-    assert sorted(os.listdir(f"{store}_bloom")) == ["batch=-1", "batch=1"]
 
     # redeliver the EXPIRED doc verbatim: its signature is gone, so it
     # re-enters (TTL semantics); the surviving batch still dedups
