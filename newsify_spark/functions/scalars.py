@@ -42,6 +42,19 @@ def epoch_us(col: Column | str) -> Column:
     return F.unix_micros(c.cast("timestamp"))
 
 
+def sql_name(name: str) -> str:
+    """A column name as a backtick-quoted Spark SQL identifier, for
+    interpolation into expression text: a caller's name may hold a dot
+    or a space, and quoting reads it as one top-level column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_double(x: float) -> str:
+    """A Python number as a Spark SQL DOUBLE literal. A bare ``0.5``
+    reads as DECIMAL(1,1); ``0.5D`` is what ``F.lit(0.5)`` builds."""
+    return f"{float(x)!r}D"
+
+
 def safe_div(num: Column, denom: Column, default: float = 0.0) -> Column:
     """num/denom with explicit 0-denominator handling (F9; the reference's
     drift formula divides by a possibly-zero historical mean)."""

@@ -7,8 +7,14 @@ Covers the reference's numpy/sklearn/faiss array math:
 - L2 normalize        (reference: batch-cluster-service.py:215-218)
 - element-wise mean   (reference: batch-cluster-service.py:128-130, np.mean axis=0)
 
-All helpers take Column (or name) and return Column, so they compose into
-any DataFrame plan and stay inside WholeStageCodegen.
+Every helper takes column NAMES and hands the JVM ONE expression: it
+composes Spark SQL text and returns a single ``F.expr``. Building the
+same tree node by node through the Column API costs one Python↔JVM
+round trip per node and member lookup (about 450 for a cosine, 3 for
+its ``F.expr``), which a micro-batch pays at every call site. The
+folds are sequential left folds over doubles from a DOUBLE zero (``0D``:
+a bare ``0.0`` would read as DECIMAL), so the values are bit-identical
+to ``queries.sqlkit``'s DuckDB forms.
 """
 
 from __future__ import annotations
@@ -16,35 +22,47 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from newsify_spark.functions.scalars import sql_name
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two equal-length array columns (double)."""
-    return F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _dot(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0D, (acc, x) -> acc + x)"
     )
 
 
-def l2_norm(a: Column | str) -> Column:
-    return F.sqrt(dot(a, a))
+def _l2_norm(a: str) -> str:
+    return f"sqrt({_dot(a, a)})"
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
+def _cosine_with_norms(a: str, b: str, na: str, nb: str) -> str:
+    return f"CASE WHEN {na} > 0 AND {nb} > 0 THEN {_dot(a, b)} / ({na} * {nb}) ELSE 0D END"
+
+
+def _l2_sq(a: str, b: str) -> str:
+    d = "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> {d} * {d}), 0D, (acc, x) -> acc + x)"
+
+
+def dot(a: str, b: str) -> Column:
+    """Dot product of two equal-length array columns (double)."""
+    return F.expr(_dot(sql_name(a), sql_name(b)))
+
+
+def l2_norm(a: str) -> Column:
+    return F.expr(_l2_norm(sql_name(a)))
+
+
+def cosine(a: str, b: str) -> Column:
     """Cosine similarity; 0.0 when either vector has zero norm (the
     reference would emit NaN via sklearn — we make the degenerate case
     explicit)."""
-    na, nb = l2_norm(a), l2_norm(b)
-    return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb)).otherwise(F.lit(0.0))
+    a, b = sql_name(a), sql_name(b)
+    return F.expr(_cosine_with_norms(a, b, _l2_norm(a), _l2_norm(b)))
 
 
-def cosine_with_norms(
-    a: Column | str, b: Column | str, na: Column | str, nb: Column | str
-) -> Column:
+def cosine_with_norms(a: str, b: str, na: str, nb: str) -> Column:
     """``cosine(a, b)`` with the two L2 norms PRECOMPUTED as columns.
 
     Bit-identical to :func:`cosine` when ``na``/``nb`` are the
@@ -54,43 +72,30 @@ def cosine_with_norms(
     norm b); computing each side's norm once per ROW before the join
     leaves one fold per pair — the guide's §1.2 "per-task work" lever,
     worth ~3x on broadcast cross joins scoring |Q| x |items| pairs."""
-    na_c, nb_c = _c(na), _c(nb)
-    return F.when(
-        (na_c > 0) & (nb_c > 0), dot(a, b) / (na_c * nb_c)
-    ).otherwise(F.lit(0.0))
+    return F.expr(_cosine_with_norms(*map(sql_name, (a, b, na, nb))))
 
 
-def l2_sq(a: Column | str, b: Column | str) -> Column:
+def l2_sq(a: str, b: str) -> Column:
     """Squared Euclidean distance — the ADC/assignment metric (sqrt is
     rank-preserving and skipped). Sequential left fold, bit-identical
     to sqlkit.l2_sq_sql."""
-    return F.aggregate(
-        F.zip_with(
-            _c(a),
-            _c(b),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return F.expr(_l2_sq(sql_name(a), sql_name(b)))
 
 
-def l2_dist(a: Column | str, b: Column | str) -> Column:
+def l2_dist(a: str, b: str) -> Column:
     """Euclidean distance (FAISS IndexFlatL2 metric)."""
-    return F.sqrt(l2_sq(a, b))
+    return F.expr(f"sqrt({_l2_sq(sql_name(a), sql_name(b))})")
 
 
-def l2_normalize(a: Column | str) -> Column:
+def l2_normalize(a: str) -> Column:
     """Scale to unit L2 norm; zero vectors pass through unchanged.
 
-    The norm is let-bound: referenced from inside the transform lambda it
-    would re-run the O(d) norm fold per ELEMENT — O(d^2) per vector."""
-    from newsify_spark.functions.scalars import let
-
-    return let(
-        l2_norm(a),
-        lambda n: F.when(
-            n > 0, F.transform(_c(a), lambda x: x.cast("double") / n)
-        ).otherwise(F.transform(_c(a), lambda x: x.cast("double"))),
+    The norm is let-bound (``scalars.let``'s one-element transform):
+    referenced from inside the transform lambda it would re-run the O(d)
+    norm fold per ELEMENT — O(d^2) per vector."""
+    a = sql_name(a)
+    return F.expr(
+        f"element_at(transform(array({_l2_norm(a)}), _l2n -> CASE WHEN _l2n > 0 "
+        f"THEN transform({a}, x -> CAST(x AS DOUBLE) / _l2n) "
+        f"ELSE transform({a}, x -> CAST(x AS DOUBLE)) END), 1)"
     )

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from newsify_spark.functions.scalars import sql_double, sql_name
 from newsify_spark.functions.text import tokens, word_shingles
 from newsify_spark.operators.similarity import (
     RHP_MAX_BUCKET,
@@ -99,21 +100,22 @@ def _signature_table(
     halves the md5 calls, the dominant cost of the pass. The digest arrays
     are their own columns, so each is computed once for both halves
     (the optimizer keeps a non-trivial projection that two consumers
-    reference, instead of inlining it into each)."""
-
-    def halves(seed: int) -> F.Column:
-        return F.transform("_sh", lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s)))
-
-    def array_min_of(digests: str, start: int) -> F.Column:
-        return F.array_min(F.transform(digests, lambda d: F.substring(d, start, 16)))
-
+    reference, instead of inlining it into each). Each projection is one
+    ``selectExpr`` of SQL text (see ``functions.vectors``)."""
     half = (num_hashes + 1) // 2
     digests = docs.withColumn(
         "_sh", F.array_distinct(word_shingles(text_col, shingle_n))
-    ).withColumns({f"_d{j}": halves(j) for j in range(half)})
-    return digests.withColumns(
-        {f"h{i}": array_min_of(f"_d{i // 2}", 1 + 16 * (i % 2)) for i in range(num_hashes)}
-    ).drop(*[f"_d{j}" for j in range(half)])
+    ).selectExpr(
+        "*", *[f"transform(_sh, s -> md5(concat('{j}|', s))) AS _d{j}" for j in range(half)]
+    )
+    return digests.selectExpr(
+        *[sql_name(c) for c in docs.columns],
+        "_sh",
+        *[
+            f"array_min(transform(_d{i // 2}, d -> substring(d, {1 + 16 * (i % 2)}, 16))) AS h{i}"
+            for i in range(num_hashes)
+        ],
+    )
 
 
 def _near_dup_losers(
@@ -129,14 +131,13 @@ def _near_dup_losers(
     from the ``_sh`` arrays (|A ∩ B| / (|A| + |B| - |A ∩ B|), the same
     counts ``jaccard_pairs`` takes from exploded shingles)."""
     cands = _bucket_candidates(bands, id_col, ["band", "bucket"], max_bucket)
-    sh = sig.select(id_col, "_sh")
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    jaccard = inter / (F.size("_sa") + F.size("_sb") - inter)
+    sh = sig.selectExpr(sql_name(id_col), "_sh")
+    inter = "size(array_intersect(_sa, _sb))"
     return (
         cands.join(sh.toDF("id_a", "_sa"), "id_a")
         .join(sh.toDF("id_b", "_sb"), "id_b")
-        .filter(jaccard >= threshold)
-        .select(F.col("id_b").alias(id_col))
+        .filter(f"{inter} / (size(_sa) + size(_sb) - {inter}) >= {sql_double(threshold)}")
+        .selectExpr(f"id_b AS {sql_name(id_col)}")
         .distinct()
     )
 
@@ -272,17 +273,14 @@ def embedding_near_dup(
 
     # norms computed once per row per side, not per pair (r12, guide
     # §1.2; bit-identical to the plain cosine)
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")).withColumn(
-        "_na", l2_norm("va")
-    )
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")).withColumn(
-        "_nb", l2_norm("vb")
-    )
+    idc, vc = sql_name(id_col), sql_name(vec_col)
+    a = emb.selectExpr(f"{idc} AS id_a", f"{vc} AS va").withColumn("_na", l2_norm("va"))
+    b = emb.selectExpr(f"{idc} AS id_b", f"{vc} AS vb").withColumn("_nb", l2_norm("vb"))
     return (
         a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("sim", cosine_with_norms(F.col("va"), F.col("vb"), "_na", "_nb"))
-        .filter(F.col("sim") >= threshold)
+        .filter("id_a < id_b")
+        .withColumn("sim", cosine_with_norms("va", "vb", "_na", "_nb"))
+        .filter(f"sim >= {sql_double(threshold)}")
         .select("id_a", "id_b", "sim")
     )
 
@@ -550,21 +548,16 @@ def _sig_bands(sigs: DataFrame, id_col: str, num_hashes: int, band_size: int) ->
     scanned it n_bands times. A lazy signature DAG runs twice, under the
     bucket rows (the second join side reuses that exchange) and under the
     sizing, where the union ran it twice per band, on that band's hashes."""
-    n_bands = num_hashes // band_size
-    entries = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    "|", *[f"h{i}" for i in range(b * band_size, (b + 1) * band_size)]
-                )
-            ).alias("bucket"),
-        )
-        for b in range(n_bands)
-    ]
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*entries)).alias("_bb")
-    ).select(id_col, "_bb.band", "_bb.bucket")
+    entries = ", ".join(
+        f"struct({b} AS band, md5(concat_ws('|', "
+        + ", ".join(f"h{i}" for i in range(b * band_size, (b + 1) * band_size))
+        + ")) AS bucket)"
+        for b in range(num_hashes // band_size)
+    )
+    idc = sql_name(id_col)
+    return sigs.selectExpr(idc, f"explode(array({entries})) AS _bb").selectExpr(
+        idc, "_bb.band", "_bb.bucket"
+    )
 
 
 def incremental_dedup(
@@ -630,23 +623,18 @@ def _store_dups(
     )
     cand = _bucket_candidates(nb, "new_id", ["band", "bucket"], max_bucket, cb, "corpus_id")
 
-    eq_terms = [
-        F.when(F.col(f"n_h{i}") == F.col(f"c_h{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    ]
-    est = sum(eq_terms[1:], eq_terms[0]) / F.lit(float(num_hashes))
-    ns = sig.select(
-        F.col(id_col).alias("new_id"), *[F.col(f"h{i}").alias(f"n_h{i}") for i in range(num_hashes)]
-    )
-    cs = corpus_sigs.select(
-        F.col(id_col).alias("corpus_id"), *[F.col(f"h{i}").alias(f"c_h{i}") for i in range(num_hashes)]
-    )
+    hs = range(num_hashes)
+    # equal positions summed as one left fold, over the hash count
+    eq = " + ".join(f"CASE WHEN n_h{i} = c_h{i} THEN 1 ELSE 0 END" for i in hs)
+    idc = sql_name(id_col)
+    ns = sig.selectExpr(f"{idc} AS new_id", *[f"h{i} AS n_h{i}" for i in hs])
+    cs = corpus_sigs.selectExpr(f"{idc} AS corpus_id", *[f"h{i} AS c_h{i}" for i in hs])
     return (
         cand.join(ns, "new_id")
         .join(cs, "corpus_id")
-        .withColumn("est", est)
-        .filter(F.col("est") >= est_threshold)
-        .select(F.col("new_id").alias(id_col))
+        .withColumn("est", F.expr(f"({eq}) / {sql_double(num_hashes)}"))
+        .filter(f"est >= {sql_double(est_threshold)}")
+        .selectExpr(f"new_id AS {idc}")
         .distinct()
     )
 
@@ -1119,11 +1107,11 @@ def semantic_dedup(
     # cosine(), so results stay bit-identical to the fold-form oracle
     # while the quadratic stage drops from three array folds per pair to
     # one.
-    from newsify_spark.functions.vectors import dot, l2_norm
+    from newsify_spark.functions.vectors import cosine_with_norms, l2_norm
 
     members = (
         pts.join(assign, id_col)
-        .withColumn("_n", l2_norm(F.col(vec_col)))
+        .withColumn("_n", l2_norm(vec_col))
         .localCheckpoint(eager=False)
     )
     max_sz = (
@@ -1162,10 +1150,7 @@ def semantic_dedup(
             F.col(vec_col).alias("vb"),
             F.col("_n").alias("nb"),
         )
-        sim = F.when(
-            (F.col("na") > 0) & (F.col("nb") > 0),
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-        ).otherwise(F.lit(0.0))
+        sim = cosine_with_norms("va", "vb", "na", "nb")
         pairs = (
             a.join(b, cluster_col)
             .filter(F.col("id_a") < F.col("id_b"))

@@ -42,9 +42,10 @@ from __future__ import annotations
 from functools import reduce
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from newsify_spark.functions.scalars import sql_double, sql_name
 from newsify_spark.functions.vectors import (
     cosine, cosine_with_norms, dot, l2_dist, l2_norm, l2_normalize,
 )
@@ -71,12 +72,12 @@ def knn_join(
     oracle-comparable.
     """
     right = F.broadcast(items) if broadcast_items else items
-    sim = METRICS[metric](F.col(query_vec), F.col(item_vec))
     asc = metric == "l2"
+    qid, iid = sql_name(query_id), sql_name(item_id)
     scored = (
         queries.crossJoin(right)
-        .withColumn("score", sim)
-        .select(query_id, item_id, "score")
+        .withColumn("score", METRICS[metric](query_vec, item_vec))
+        .selectExpr(qid, iid, "score")
     )
     if k == 1:
         # argmax via one aggregation instead of a window: the per-pair
@@ -86,21 +87,11 @@ def knn_join(
         # lexicographic min of (signed score, item_id); works for any
         # orderable id type. (Caveat: NaN scores sort last here but first
         # under the window's DESC order — unreachable for finite vectors.)
-        skey = F.col("score") if asc else -F.col("score")
+        skey = "score" if asc else "-score"
         best = scored.groupBy(query_id).agg(
-            F.min(
-                F.struct(
-                    skey.alias("_k"),
-                    F.col(item_id).alias("_id"),
-                    F.col("score").alias("_s"),
-                )
-            ).alias("_b")
+            F.expr(f"min(struct({skey} AS _k, {iid} AS _id, score AS _s)) AS _b")
         )
-        return best.select(
-            query_id,
-            F.col("_b._id").alias(item_id),
-            F.col("_b._s").alias("score"),
-        )
+        return best.selectExpr(qid, f"_b._id AS {iid}", "_b._s AS score")
     order = [F.col("score").asc() if asc else F.col("score").desc(), F.col(item_id).asc()]
     return top_k_per_group(scored, [query_id], order, k)
 
@@ -132,11 +123,11 @@ def nearest_centroid_assign(
         item_vec=centroid_vec,
         metric="cosine",
     )
-    return best.select(
-        point_id,
-        centroid_id,
-        F.col("score").alias("similarity"),
-        (F.col("score") > threshold).alias("matched"),
+    return best.selectExpr(
+        sql_name(point_id),
+        sql_name(centroid_id),
+        "score AS similarity",
+        f"score > {sql_double(threshold)} AS matched",
     )
 
 
@@ -317,22 +308,22 @@ def _bucket_candidates(
       (``id_col``, ``right_id``), which must be distinct names.
     """
 
-    def capped(side: DataFrame, keep: Column) -> DataFrame:
-        sized = side.groupBy(*keys).agg(F.count("*").alias("n"))
-        return side.join(sized.filter(keep).select(*keys), keys, "left_semi")
+    qkeys = [sql_name(k) for k in keys]
 
-    n = F.col("n")
+    def capped(side: DataFrame, keep: str) -> DataFrame:
+        sized = side.groupBy(*keys).agg(F.expr("count(*) AS n"))
+        return side.join(sized.filter(keep).selectExpr(*qkeys), keys, "left_semi")
+
     if right is not None:
-        return sig.join(capped(right, n <= max_bucket), keys).select(id_col, right_id).distinct()
-    side = capped(sig, n.between(2, max_bucket))
-    a = side.select(*keys, F.col(id_col).alias("id_a"))
-    b = side.select(*keys, F.col(id_col).alias("id_b"))
-    return (
-        a.join(b, keys)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+        return (
+            sig.join(capped(right, f"n <= {max_bucket}"), keys)
+            .selectExpr(sql_name(id_col), sql_name(right_id))
+            .distinct()
+        )
+    side = capped(sig, f"n >= 2 AND n <= {max_bucket}")
+    a = side.selectExpr(*qkeys, f"{sql_name(id_col)} AS id_a")
+    b = side.selectExpr(*qkeys, f"{sql_name(id_col)} AS id_b")
+    return a.join(b, keys).filter("id_a < id_b").select("id_a", "id_b").distinct()
 
 
 def _unit_dot(
@@ -346,11 +337,16 @@ def _unit_dot(
     a, b = pairs.columns
     if right is None:
         right, right_id, right_vec = sig, id_col, vec_col
-    b0 = F.col("band") == 0
+
+    def unit(side: DataFrame, sid: str, vec: str, pid: str, v: str) -> DataFrame:
+        return side.filter("band = 0").selectExpr(
+            f"{sql_name(sid)} AS {sql_name(pid)}", f"{sql_name(vec)} AS {v}"
+        )
+
     return (
-        pairs.join(sig.filter(b0).select(F.col(id_col).alias(a), F.col(vec_col).alias("_va")), a)
-        .join(right.filter(b0).select(F.col(right_id).alias(b), F.col(right_vec).alias("_vb")), b)
-        .withColumn("sim", dot(F.col("_va"), F.col("_vb")))
+        pairs.join(unit(sig, id_col, vec_col, a, "_va"), a)
+        .join(unit(right, right_id, right_vec, b, "_vb"), b)
+        .withColumn("sim", dot("_va", "_vb"))
         .drop("_va", "_vb")
     )
 
@@ -435,7 +431,7 @@ def _assign_items_to_cells(
         df.withColumn("_vn", l2_norm(vec_col))
         .crossJoin(F.broadcast(cells.withColumn("_cn", l2_norm("cell_vec"))))
         .withColumn(
-            "csim", cosine_with_norms(F.col(vec_col), F.col("cell_vec"), "_vn", "_cn")
+            "csim", cosine_with_norms(vec_col, "cell_vec", "_vn", "_cn")
         )
         .transform(
             lambda d: top_k_per_group(
@@ -492,7 +488,7 @@ def knn_join_ivf(
         query_id, item_id, query_vec, item_vec, "_qn", "_vn"
     )
     scored = cands.withColumn(
-        "score", cosine_with_norms(F.col(query_vec), F.col(item_vec), "_qn", "_vn")
+        "score", cosine_with_norms(query_vec, item_vec, "_qn", "_vn")
     ).select(query_id, item_id, "score")
     return top_k_per_group(
         scored, [query_id], [F.col("score").desc(), F.col(item_id).asc()], k
@@ -850,7 +846,7 @@ def _adc_knn(
     scored = (
         shortlist.join(F.broadcast(queries.select(query_id, query_vec)), query_id)
         .join(items.select(item_id, item_vec), item_id)
-        .withColumn("score", cosine(F.col(query_vec), F.col(item_vec)))
+        .withColumn("score", cosine(query_vec, item_vec))
         .select(query_id, item_id, "score")
     )
     return top_k_per_group(

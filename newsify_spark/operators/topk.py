@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from newsify_spark.functions.scalars import sql_name
+
 
 def top_k_per_group(
     df: DataFrame,
@@ -33,7 +35,7 @@ def top_k_per_group(
         # single-partition WindowExec (VERDICT round-3 item #8)
         return global_top_k(df, order_cols, k, rank_col if keep_rank else None)
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    out = df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
+    out = df.withColumn(rank_col, F.row_number().over(w)).filter(f"{sql_name(rank_col)} <= {int(k)}")
     return out if keep_rank else out.drop(rank_col)
 
 

@@ -484,7 +484,7 @@ def vec_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         cand.join(F.broadcast(qe), "query_id")
         .join(ie, "item_id")
-        .withColumn("score", cosine_with_norms(F.col("qv"), F.col("iv"), "_qn", "_in"))
+        .withColumn("score", cosine_with_norms("qv", "iv", "_qn", "_in"))
         .select("query_id", "item_id", "score")
     )
     top = top_k_per_group(

@@ -28,6 +28,9 @@ code is correct on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
@@ -80,3 +83,51 @@ def codegen_compiles(spark: SparkSession) -> int:
     that host load cannot move."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+@dataclass
+class RoundTrips:
+    """Python→JVM commands counted by :func:`round_trips`."""
+
+    count: int = 0
+
+
+@contextmanager
+def round_trips(spark: SparkSession) -> Iterator[RoundTrips]:
+    """Count the py4j call and reflection commands the driver sends to
+    the JVM inside the block::
+
+        with round_trips(spark) as rt:
+            ...
+        rt.count
+
+    Each is one blocking round trip over the gateway socket. Building a
+    plan node by node through the Column API costs one per node and
+    member lookup, so this is the driver-side cost of constructing
+    DataFrames, apart from the jobs they run. Memory-detach commands are
+    not counted: the gateway sends them when Python's garbage collector
+    frees a JVM reference, so their number follows GC timing, while the
+    counted commands repeat exactly for the same code path. Wraps the
+    connection class of the session's gateway (py4j's pinned-thread
+    ``ClientServer`` or the classic ``JavaGateway``), in every thread,
+    for the duration of the block; blocks nest."""
+    from py4j import protocol
+    from py4j.clientserver import ClientServer, ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    gateway = spark.sparkContext._gateway
+    conn = ClientServerConnection if isinstance(gateway, ClientServer) else GatewayConnection
+    counted = (protocol.CALL_COMMAND_NAME, protocol.REFLECTION_COMMAND_NAME)
+    rt = RoundTrips()
+    send = conn.send_command
+
+    def counting_send(self, command):
+        if command.startswith(counted):
+            rt.count += 1
+        return send(self, command)
+
+    conn.send_command = counting_send
+    try:
+        yield rt
+    finally:
+        conn.send_command = send

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from newsify_spark.operators.cms import cm_build, cm_estimate
+from newsify_spark.tables import read_batch_store
 
 
 def load_sketch_store(
@@ -38,13 +39,15 @@ def load_sketch_store(
     exclude_batch: int | None = None,
 ) -> DataFrame:
     """Merged (r, c, cnt) sketch across all persisted batch partitions;
-    empty sketch if nothing ingested yet."""
-    try:
-        s = spark.read.option("basePath", store_path).parquet(store_path)
-    except Exception:  # path missing — empty store
-        return spark.createDataFrame([], "r int, c long, cnt long")
-    if exclude_batch is not None and "batch" in s.columns:
-        s = s.filter(F.col("batch") != exclude_batch)
+    empty sketch if nothing ingested yet. A store that exists but cannot
+    be read raises when it is scanned: taking it for an empty sketch
+    would switch the cap off without a sign."""
+    schema = "r int, c long, cnt long"
+    s = read_batch_store(spark, store_path, schema)
+    if s is None:
+        return spark.createDataFrame([], schema)
+    if exclude_batch is not None:
+        s = s.filter(f"batch != {int(exclude_batch)}")
     return s.groupBy("r", "c").agg(F.sum("cnt").alias("cnt"))
 
 

@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from newsify_spark.functions.scalars import sql_name
 from newsify_spark.operators.dedup import (
     _near_dup_losers,
     _sig_bands,
@@ -71,23 +72,20 @@ def load_signature_store(
     """Signature store as a DataFrame of (id, ``text_hash``, h0..h{K-1});
     empty (with that schema) if nothing has been ingested yet.
     ``exclude_batch`` drops one batch partition — a replayed batch must
-    not see its own failed write. A store from an older layout without
-    ``text_hash`` still loads, with a null ``text_hash``: its rows drop
-    exact re-deliveries through the signature estimate (1.0) instead.
-    A store that exists but cannot be read raises."""
+    not see its own failed write. The store is read with that known
+    schema, so loading it runs no job, and a partition from an older
+    layout without ``text_hash`` loads with a null ``text_hash`` while
+    every other partition keeps its hashes: those rows drop exact
+    re-deliveries through the signature estimate (1.0) instead. A store
+    that exists but cannot be read raises when it is scanned."""
     hcols = [f"h{i}" for i in range(num_hashes)]
-    sigs = read_batch_store(spark, store_path)
+    schema = ", ".join([f"{sql_name(id_col)} long", "text_hash string"] + [f"{h} string" for h in hcols])
+    sigs = read_batch_store(spark, store_path, schema)
     if sigs is None:
-        schema = ", ".join([f"{id_col} long", "text_hash string"] + [f"{h} string" for h in hcols])
         return spark.createDataFrame([], schema)
-    if exclude_batch is not None and "batch" in sigs.columns:
-        sigs = sigs.filter(F.col("batch") != exclude_batch)
-    text_hash = (
-        F.col("text_hash")
-        if "text_hash" in sigs.columns
-        else F.lit(None).cast("string").alias("text_hash")
-    )
-    return sigs.select(id_col, text_hash, *hcols)
+    if exclude_batch is not None:
+        sigs = sigs.filter(f"batch != {int(exclude_batch)}")
+    return sigs.drop("batch")
 
 
 def ingest_batch(
@@ -142,7 +140,7 @@ def ingest_batch(
     #    the shingle/MinHash pass: one anti-join on the store's text_hash
     #    column. An exact dup it cannot see (a store row without a text
     #    hash) still meets estimate 1.0 in the store-estimate stage.
-    fresh = batch.withColumn("text_hash", F.md5(F.col(text_col))).join(
+    fresh = batch.withColumn("text_hash", F.expr(f"md5({sql_name(text_col)})")).join(
         pre_store.select("text_hash"), "text_hash", "left_anti"
     )
     # 1. the batch's ONE signature pass, materialized: the band table, the
@@ -158,7 +156,7 @@ def ingest_batch(
     # materialized once: it feeds the corpus write and the signature-store
     # write
     survivors = sig.join(drop, id_col, "left_anti").localCheckpoint(eager=True)
-    kept = survivors.select(*cols)
+    kept = survivors.selectExpr(*map(sql_name, cols))
     if txn_bronze:
         from newsify_spark.operators.txnlog import idempotent_append
 
@@ -173,8 +171,8 @@ def ingest_batch(
         kept.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
     # 3. signatures + text_hash (the next batch's exact-dup anti-join) to
     #    the store, straight from the survivors' checkpoint
-    survivors.select(
-        id_col, *[f"h{i}" for i in range(num_hashes)], "text_hash"
+    survivors.selectExpr(
+        sql_name(id_col), *[f"h{i}" for i in range(num_hashes)], "text_hash"
     ).write.mode("overwrite").parquet(f"{store_path}/batch={batch_id}")
     if txn_bronze:
         # the txnlog itself holds the written rows; the checkpointed

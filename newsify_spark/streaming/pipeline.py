@@ -26,8 +26,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from newsify_spark.functions.scalars import sql_double
 from newsify_spark.operators.dedup import neardup_auto
 from newsify_spark.operators.similarity import nearest_centroid_assign
 from newsify_spark.operators.topk import top_k_per_group
@@ -78,13 +78,10 @@ def _mint_stories(unmatched: DataFrame, next_id: int) -> DataFrame:
     never the corpus; a sharded deployment would switch to per-partition
     count offsets if single-batch mints exceeded ~10^7.
     """
-    w = Window.orderBy("article_id")
-    return unmatched.select(
+    return unmatched.selectExpr(
         "article_id",
-        F.col("embedding").alias("centroid"),
-        F.concat(
-            F.lit("story_"), (F.row_number().over(w) + F.lit(next_id) - 1)
-        ).alias("story_id"),
+        "embedding AS centroid",
+        f"concat('story_', row_number() OVER (ORDER BY article_id) + {next_id} - 1) AS story_id",
     )
 
 
@@ -184,48 +181,40 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
             allpairs_rows_max=PASS2_ALLPAIRS_MAX,
             n_rows=n_rows,
         )
-        .filter(F.col("sim") > state.threshold)  # reference compares strictly
-        .select(F.col("id_b").alias("lid"), F.col("id_a").alias("eid"), "sim")
+        .filter(f"sim > {sql_double(state.threshold)}")  # reference compares strictly
+        .selectExpr("id_b AS lid", "id_a AS eid", "sim")
     )
     leaders = unmatched.join(
-        sims.select(F.col("lid").alias("article_id")).distinct(), "article_id", "left_anti"
+        sims.selectExpr("lid AS article_id").distinct(), "article_id", "left_anti"
     )
     # followers: best EARLIER LEADER above τ (ties: sim desc, eid asc)
-    lead_sims = sims.join(
-        leaders.select(F.col("article_id").alias("eid")), "eid", "left_semi"
-    )
+    lead_sims = sims.join(leaders.selectExpr("article_id AS eid"), "eid", "left_semi")
     fmatch = top_k_per_group(
         lead_sims, ["lid"], [F.col("sim").desc(), F.col("eid").asc()], 1
     )
     fmatch = fmatch.localCheckpoint(eager=True)
     # minters = leaders + articles whose matches were all non-leaders
-    minters = unmatched.join(
-        fmatch.select(F.col("lid").alias("article_id")), "article_id", "left_anti"
-    )
+    minters = unmatched.join(fmatch.selectExpr("lid AS article_id"), "article_id", "left_anti")
     minted = _mint_stories(minters, state.next_id).localCheckpoint(eager=False)
     n_minted = minted.count()  # writes the checkpoint; no row collect
-    followers = fmatch.join(
-        minted.select(F.col("article_id").alias("eid"), "story_id"), "eid"
-    ).select(F.col("lid").alias("article_id"), "story_id", F.col("sim").alias("similarity"))
+    followers = fmatch.join(minted.selectExpr("article_id AS eid", "story_id"), "eid").selectExpr(
+        "lid AS article_id", "story_id", "sim AS similarity"
+    )
 
     out = (
-        matched.select("article_id", "story_id", "similarity", F.lit(False).alias("is_new"))
+        matched.selectExpr("article_id", "story_id", "similarity", "false AS is_new")
         .unionByName(
-            minted.select(
-                "article_id", "story_id", F.lit(1.0).alias("similarity"), F.lit(True).alias("is_new")
-            )
+            minted.selectExpr("article_id", "story_id", "1.0D AS similarity", "true AS is_new")
         )
         .unionByName(
-            followers.select("article_id", "story_id", "similarity", F.lit(False).alias("is_new"))
+            followers.selectExpr("article_id", "story_id", "similarity", "false AS is_new")
         )
     )
 
     # the fold: one story-keyed aggregate over the prior stories, the
     # minted seeds (n = 1) and the members' vectors (the followers' read
     # from the unmatched checkpoint)
-    prior = stories.unionByName(
-        minted.select("story_id", "centroid", F.lit(1).alias("n_members"))
-    )
+    prior = stories.unionByName(minted.selectExpr("story_id", "centroid", "1 AS n_members"))
     members = matched.select("story_id", "embedding").unionByName(
         followers.join(unmatched, "article_id").select("story_id", "embedding")
     )
@@ -233,23 +222,17 @@ def assign_batch_to_stories(batch: DataFrame, state: StoryState) -> DataFrame:
         prior.unionByName(members, allowMissingColumns=True)
         .groupBy("story_id")
         .agg(
-            F.first("centroid", ignorenulls=True).alias("c"),
-            F.first("n_members", ignorenulls=True).alias("n"),
-            F.collect_list("embedding").alias("xs"),
+            F.expr("first(centroid, true) AS c"),
+            F.expr("first(n_members, true) AS n"),
+            F.expr("collect_list(embedding) AS xs"),
         )
     )
-    n, k = F.col("n"), F.size("xs")
-    sum_x = F.aggregate(
-        "xs",
-        F.array_repeat(F.lit(0.0), F.size("c")),
-        lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
-    )
-    folded = g.select(
+    sum_x = "aggregate(xs, array_repeat(0D, size(c)), (acc, x) -> zip_with(acc, x, (a, b) -> a + b))"
+    folded = g.selectExpr(
         "story_id",
-        F.when(k > 0, F.zip_with("c", sum_x, lambda c, sx: (c * n + sx) / (n + k)))
-        .otherwise(F.col("c"))
-        .alias("centroid"),
-        (n + k).alias("n_members"),
+        f"CASE WHEN size(xs) > 0 THEN zip_with(c, {sum_x}, (cv, sx) -> (cv * n + sx) / (n + size(xs))) "
+        "ELSE c END AS centroid",
+        "n + size(xs) AS n_members",
     )
     # localCheckpoint materializes the state AND truncates its lineage —
     # without it the state plan nests one level per micro-batch and the

@@ -4,8 +4,8 @@ The driver materializes deterministic parquet tables under
 ``/root/testdata/sf{0.001,0.01,0.1}`` (TESTDATA.md). All queries take an
 ``sf_dir`` so the same code runs at any scale factor; at 100 TB the only
 change is the path (and partitioned layout — see ``write_partitioned``).
-Batch-partitioned stores (the signature and bloom word stores) read
-through ``read_batch_store``.
+Batch-partitioned stores (the signature, bloom word and frequency-cap
+sketch stores) read through ``read_batch_store``.
 """
 
 from __future__ import annotations
@@ -80,15 +80,26 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def read_batch_store(spark: SparkSession, store_path: str) -> DataFrame | None:
+def read_batch_store(
+    spark: SparkSession, store_path: str, schema: str | None = None
+) -> DataFrame | None:
     """A ``<path>/batch=<id>`` parquet store as one DataFrame with a
     ``batch`` column, or None if it holds nothing yet: the directory is
-    missing, or every partition is ``_SUCCESS``-only (an empty batch). A
-    store that exists but does not read (a corrupt or foreign file)
-    raises: taking it for an empty store would switch its dedup off
-    without a sign."""
+    missing, or (schema inferred) every partition is ``_SUCCESS``-only
+    (an empty batch). A store that exists but does not read (a corrupt
+    or foreign file) raises: taking it for an empty store would switch
+    its dedup off without a sign.
+
+    A store with a known layout passes its ``schema`` (DDL, without the
+    ``batch`` column). The read then runs no footer-inference job, a
+    column missing from an older partition reads as null in that
+    partition alone, and a corrupt file raises when the store is
+    scanned."""
+    reader = spark.read.option("basePath", store_path)
+    if schema is not None:
+        reader = reader.schema(schema)
     try:
-        return spark.read.option("basePath", store_path).parquet(store_path)
+        return reader.parquet(store_path)
     except AnalysisException as e:
         if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             return None

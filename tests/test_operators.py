@@ -1876,7 +1876,7 @@ def test_ivfpq_index_save_load_roundtrip(spark, tmp_path):
     cells = spark.createDataFrame(cells.collect(), "cell int, cell_vec array<double>")
     assign = (
         items.crossJoin(F.broadcast(cells))
-        .withColumn("csim", cosine(F.col("item_vec"), F.col("cell_vec")))
+        .withColumn("csim", cosine("item_vec", "cell_vec"))
         .transform(lambda df: top_k_per_group(
             df, ["item_id"], [F.col("csim").desc(), F.col("cell").asc()], 1))
         .select("item_id", "cell")

@@ -772,6 +772,7 @@ def test_ingest_store_without_text_hash_drops_exact_redelivery(spark, tmp_path):
     still loads (with a null text hash), and an exact re-delivery of one
     of its docs is still dropped: the anti-join cannot see it, but its
     signature estimate against the store is 1.0."""
+    import hashlib
     import shutil
 
     from newsify_spark.streaming.ingest import ingest_batch, load_signature_store
@@ -789,8 +790,20 @@ def test_ingest_store_without_text_hash_drops_exact_redelivery(spark, tmp_path):
 
     sigs = load_signature_store(spark, store)
     assert sorted((r.doc_id, r.text_hash) for r in sigs.collect()) == [(1, None), (2, None)]
-    s1 = ingest_batch(mk([(10, t1), (11, "a third totally novel text about engines")]), 1, store, out)
+    t3 = "a third totally novel text about engines"
+    s1 = ingest_batch(mk([(10, t1), (11, t3)]), 1, store, out)
     assert [r.doc_id for r in s1.collect()] == [11]
+
+    # mixed store, oldest partition in the older layout: the newer
+    # partition's text hashes still load (a schema inferred from the
+    # oldest partition would null them all), so a re-delivery of doc 11
+    # leaves by the anti-join
+    sigs = load_signature_store(spark, store)
+    got = sorted((r.doc_id, r.text_hash) for r in sigs.collect())
+    assert got == [(1, None), (2, None), (11, hashlib.md5(t3.encode()).hexdigest())]
+    assert load_signature_store(spark, store, exclude_batch=1).count() == 2
+    s2 = ingest_batch(mk([(20, t3)]), 2, store, out)
+    assert s2.count() == 0
 
 
 def test_ingest_batch_raises_on_corrupt_store(spark, tmp_path):
@@ -900,6 +913,14 @@ def _compile_stream_batch(spark, batch_id: int):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+# Python→JVM call and reflection commands of the third (warm) batch of
+# the _compile_stream_batch stream, its test-side embedding select
+# included: 1,009 measured with the expressions handed over as SQL text,
+# 6,705 when every expression was built node by node through the Column
+# API
+WARM_BATCH_ROUND_TRIPS_MAX = 1500
+
+
 def test_warm_micro_batch_compiles_few_classes(spark, tmp_path):
     """A long-lived session compiles each generated class of the
     micro-batch body (``ingest_batch`` + ``assign_batch_to_stories``)
@@ -908,29 +929,37 @@ def test_warm_micro_batch_compiles_few_classes(spark, tmp_path):
     residue is ``_mint_stories`` inlining ``next_id`` into the row-number
     projection and AQE renumbering codegen stages as the store grows).
     With Spark's default 100-entry codegen cache every batch misses on
-    each of its ~240 classes and compiles them all again."""
-    from newsify_spark.session import codegen_compiles
+    each of its ~240 classes and compiles them all again.
+
+    The driver hands each expression to the JVM as one piece of SQL
+    text, so the third batch also stays within its round-trip bound
+    (``session.round_trips``: an exact count, the same in every warm
+    batch)."""
+    from newsify_spark.session import codegen_compiles, round_trips
     from newsify_spark.streaming.ingest import ingest_batch
     from newsify_spark.streaming.pipeline import StoryState, assign_batch_to_stories
 
     store, out = str(tmp_path / "store"), str(tmp_path / "out")
     state = StoryState()
-    deltas = []
+    deltas, trips = [], []
     for batch_id in range(3):
         docs = _compile_stream_batch(spark, batch_id)
         c0 = codegen_compiles(spark)
-        kept = ingest_batch(docs, batch_id, store, out)
-        arts = kept.select(
-            F.col("doc_id").alias("article_id"),
-            F.transform(
-                F.sequence(F.lit(1), F.lit(8)),
-                lambda j: F.sin(j * (F.col("doc_id") % 5 + 1)) + F.col("doc_id") / 1e4,
-            ).alias("embedding"),
-        )
-        got = assign_batch_to_stories(arts, state).collect()
+        with round_trips(spark) as rt:
+            kept = ingest_batch(docs, batch_id, store, out)
+            arts = kept.select(
+                F.col("doc_id").alias("article_id"),
+                F.transform(
+                    F.sequence(F.lit(1), F.lit(8)),
+                    lambda j: F.sin(j * (F.col("doc_id") % 5 + 1)) + F.col("doc_id") / 1e4,
+                ).alias("embedding"),
+            )
+            got = assign_batch_to_stories(arts, state).collect()
         deltas.append(codegen_compiles(spark) - c0)
+        trips.append(rt.count)
         assert len(got) == kept.count() > 0
     assert deltas[2] <= 40, deltas
+    assert 0 < trips[2] <= WARM_BATCH_ROUND_TRIPS_MAX, trips
 
 
 # jobs of the third (warm) ingest_batch on the _compile_stream_batch
@@ -1026,6 +1055,28 @@ def test_freq_cap_admits_at_most_cap_per_key_across_batches(spark, tmp_path):
 
     # store stays sketch-sized: <= d*w rows after merging all batches
     assert load_sketch_store(spark, store).count() <= 4 * 64
+
+
+def test_freq_cap_raises_on_corrupt_store(spark, tmp_path):
+    """A sketch store partition holding a non-parquet file is an error,
+    not an empty sketch: taking it for empty would lift the cap."""
+    import glob
+    import os
+
+    import pytest
+
+    from newsify_spark.streaming.freqcap import cap_batch
+
+    store = str(tmp_path / "cms_store")
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, source string")
+    a0 = cap_batch(mk([(1, "hot"), (2, "hot")]), 0, store, "source", "doc_id", cap=2)
+    assert a0.count() == 2
+    for f in glob.glob(f"{store}/batch=0/*"):
+        os.remove(f)
+    with open(f"{store}/batch=0/part-00000.parquet", "w") as fh:
+        fh.write("not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        cap_batch(mk([(3, "hot"), (4, "hot")]), 1, store, "source", "doc_id", cap=2).collect()
 
 
 def test_freq_cap_replay_is_idempotent(spark, tmp_path):
