@@ -6,10 +6,9 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 ``compiles`` maps each query to the generated classes every pass compiled
-(codegen-cache misses, from Spark's ``CodegenMetrics``), ``jobs`` to
+(codegen-cache misses, from Spark's ``CodegenMetrics``), and ``jobs`` to
 the Spark jobs every pass ran (status tracker, one job group per query
-and pass), and ``round_trips`` to the Python→JVM call and reflection
-commands every pass sent (``session.round_trips``).
+and pass).
 
 Execution is forced through the noop sink so every output column is
 materialized (a bare count() would let Spark prune the projections).
@@ -31,7 +30,7 @@ import sys
 import time
 
 from newsify_spark.queries import REGISTRY
-from newsify_spark.session import codegen_compiles, get_spark, round_trips
+from newsify_spark.session import codegen_compiles, get_spark
 from newsify_spark.tables import DEFAULT_SF_DIR
 
 
@@ -90,7 +89,6 @@ def main() -> None:
     # misses): pass 1 is cold, later passes should compile ~nothing
     compiles: dict[str, list[int]] = {name: [] for name in names}
     jobs: dict[str, list[int]] = {name: [] for name in names}
-    trips: dict[str, list[int]] = {name: [] for name in names}
     sc = spark.sparkContext
     for p in range(passes):
         pass_t: dict[str, float] = {}
@@ -100,16 +98,13 @@ def main() -> None:
             sc.setJobGroup(group, group)
             c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
-            with round_trips(spark) as rt:
-                force(q.fn(spark, sf_dir))
+            force(q.fn(spark, sf_dir))
             pass_t[name] = round(time.perf_counter() - t0, 3)
             compiles[name].append(codegen_compiles(spark) - c0)
             jobs[name].append(len(sc.statusTracker().getJobIdsForGroup(group)))
-            trips[name].append(rt.count)
             print(
                 f"# pass {p + 1}/{passes} {name}: {pass_t[name]}s, "
-                f"{compiles[name][-1]} compiles, {jobs[name][-1]} jobs, "
-                f"{rt.count} round trips",
+                f"{compiles[name][-1]} compiles, {jobs[name][-1]} jobs",
                 file=sys.stderr,
             )
         runs.append(pass_t)
@@ -307,7 +302,6 @@ def main() -> None:
                 "queries": timings,
                 "compiles": compiles,
                 "jobs": jobs,
-                "round_trips": trips,
                 "staging": staging,
                 "passes": passes,
                 "sf": sf,

@@ -149,7 +149,7 @@ def load_bloom_store_df(spark, store_path: str) -> tuple[DataFrame | None, int |
     Returns (None, None) on a missing/empty store; a store that exists
     but cannot be read raises. Raises if partitions disagree on m_bits
     (bitmaps at different moduli do not merge)."""
-    words = read_batch_store(spark, store_path)
+    words = read_batch_store(spark, store_path, "word long, bits long, m_bits long")
     if words is None:
         return None, None
     sizes = [r["m_bits"] for r in words.select("m_bits").distinct().limit(3).collect()]

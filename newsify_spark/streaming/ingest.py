@@ -181,7 +181,7 @@ def ingest_batch(
     # hand the caller the WRITTEN rows (identical by construction: the
     # overwrite above is the only writer of this partition) — a file
     # scan that does not depend on executor-local checkpoint blocks.
-    # Explicit schema: an empty batch writes a _SUCCESS-only dir.
+    # Explicit schema: the read runs no footer-inference job.
     return spark.read.schema(kept.schema).parquet(f"{out_path}/batch={batch_id}")
 
 

@@ -80,30 +80,25 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def read_batch_store(
-    spark: SparkSession, store_path: str, schema: str | None = None
-) -> DataFrame | None:
-    """A ``<path>/batch=<id>`` parquet store as one DataFrame with a
-    ``batch`` column, or None if it holds nothing yet: the directory is
-    missing, or (schema inferred) every partition is ``_SUCCESS``-only
-    (an empty batch). A store that exists but does not read (a corrupt
-    or foreign file) raises: taking it for an empty store would switch
-    its dedup off without a sign.
+def read_batch_store(spark: SparkSession, store_path: str, schema: str) -> DataFrame | None:
+    """A ``<path>/batch=<id>`` parquet store as one DataFrame of
+    ``schema`` (DDL, without the ``batch`` column) plus ``batch``, or
+    None if it holds nothing yet: the directory is missing, or it holds
+    no data file (every partition expired, or ``_SUCCESS``-only), so
+    Spark finds no ``batch`` partition column.
 
-    A store with a known layout passes its ``schema`` (DDL, without the
-    ``batch`` column). The read then runs no footer-inference job, a
+    With the schema known the read runs no footer-inference job, and a
     column missing from an older partition reads as null in that
-    partition alone, and a corrupt file raises when the store is
-    scanned."""
-    reader = spark.read.option("basePath", store_path)
-    if schema is not None:
-        reader = reader.schema(schema)
+    partition alone. A store that exists but does not read (a corrupt or
+    foreign file) raises when it is scanned: taking it for an empty
+    store would switch its dedup or cap off without a sign."""
     try:
-        return reader.parquet(store_path)
+        df = spark.read.schema(schema).option("basePath", store_path).parquet(store_path)
     except AnalysisException as e:
-        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+        if e.getCondition() == "PATH_NOT_FOUND":
             return None
         raise
+    return df if "batch" in df.columns else None
 
 
 def write_partitioned(df: DataFrame, path: str, *, partition_by: list[str] | None = None, buckets: tuple[int, str] | None = None) -> None:

@@ -806,6 +806,38 @@ def test_ingest_store_without_text_hash_drops_exact_redelivery(spark, tmp_path):
     assert s2.count() == 0
 
 
+def test_ingest_reads_store_without_data_files_as_empty(spark, tmp_path):
+    """A signature store that holds no data file is an empty store: every
+    partition expired (``keep_last=0``), or the partitions hold only
+    ``_SUCCESS`` (an empty batch from a writer that leaves no file for
+    it). The next batch ingests against it instead of failing."""
+    import glob
+    import os
+
+    from newsify_spark.streaming.ingest import (
+        expire_store_batches,
+        ingest_batch,
+        load_signature_store,
+    )
+
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
+    t1 = "some document text with enough words to shingle properly here"
+    ingest_batch(mk([(1, t1)]), 0, store, out).count()
+    assert expire_store_batches(store, keep_last=0) == [0]
+    assert os.listdir(store) == []
+    assert load_signature_store(spark, store).count() == 0
+    # the expired doc re-enters against the empty store
+    assert [r.doc_id for r in ingest_batch(mk([(10, t1)]), 1, store, out).collect()] == [10]
+
+    store2, out2 = str(tmp_path / "store2"), str(tmp_path / "out2")
+    ingest_batch(mk([]), 0, store2, out2).count()
+    for f in glob.glob(f"{store2}/batch=0/part-*"):
+        os.remove(f)
+    assert load_signature_store(spark, store2).count() == 0
+    assert [r.doc_id for r in ingest_batch(mk([(1, t1)]), 1, store2, out2).collect()] == [1]
+
+
 def test_ingest_batch_raises_on_corrupt_store(spark, tmp_path):
     """A signature store that exists but does not read is an error, not an
     empty store: taking it for empty would admit every document."""
@@ -1055,6 +1087,33 @@ def test_freq_cap_admits_at_most_cap_per_key_across_batches(spark, tmp_path):
 
     # store stays sketch-sized: <= d*w rows after merging all batches
     assert load_sketch_store(spark, store).count() <= 4 * 64
+
+
+def test_freq_cap_reads_store_without_data_files_as_empty(spark, tmp_path):
+    """A sketch store that holds no data file (every partition expired,
+    or an empty batch's partition holding only ``_SUCCESS``) is an empty
+    sketch: the next batch caps from zero instead of failing."""
+    import glob
+    import os
+
+    from newsify_spark.streaming.freqcap import cap_batch, load_sketch_store
+    from newsify_spark.streaming.ingest import expire_store_batches
+
+    store = str(tmp_path / "cms_store")
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, source string")
+    hot3 = lambda base: mk([(base + i, "hot") for i in range(3)])
+    cap_batch(hot3(0), 0, store, "source", "doc_id", cap=2).count()
+    assert expire_store_batches(store, keep_last=0) == [0]
+    a1 = cap_batch(hot3(10), 1, store, "source", "doc_id", cap=2)
+    assert sorted(r.doc_id for r in a1.collect()) == [10, 11]
+
+    store2 = str(tmp_path / "cms_store2")
+    cap_batch(mk([]), 0, store2, "source", "doc_id", cap=2).count()
+    for f in glob.glob(f"{store2}/batch=0/part-*"):
+        os.remove(f)
+    assert load_sketch_store(spark, store2).count() == 0
+    a1 = cap_batch(hot3(20), 1, store2, "source", "doc_id", cap=2)
+    assert sorted(r.doc_id for r in a1.collect()) == [20, 21]
 
 
 def test_freq_cap_raises_on_corrupt_store(spark, tmp_path):
